@@ -12,7 +12,7 @@ import graft.model.EventSchema
   *
   * Behavioral spec (reference O-15..O-19):
   *  - seghouse/util/dataframe_util.py:63-64   NaN->NULL (native in Spark)
-  *  - seghouse/util/dataframe_util.py:67-89   default fills / bool->int
+  *  - seghouse/util/dataframe_util.py:85-89   bool->int
   *  - seghouse/util/dataframe_util.py:92-96   add missing columns as NULL
   *  - seghouse/util/dataframe_util.py:99-185  fix_data_types: the TABLE
   *    schema wins; each cell is cast to the table's type; a failed cast
@@ -50,13 +50,6 @@ object Coerce {
     case other         => other.simpleString
   }
 
-  private def numericFamily(dt: DataType): Option[String] = dt match {
-    case ByteType | ShortType | IntegerType | LongType => Some("int")
-    case FloatType | DoubleType                        => Some("float")
-    case _: DecimalType                                => Some("decimal")
-    case _                                             => None
-  }
-
   /** O-18: add every target column absent from the batch as all-NULL of the
     * target type (reference dataframe_util.py:92-96). */
   def addMissingColumns(df: DataFrame, target: StructType): DataFrame = {
@@ -72,17 +65,6 @@ object Coerce {
     df.schema.fields.filter(_.dataType == BooleanType).foldLeft(df) { (d, f) =>
       d.withColumn(f.name, coalesce(col(f.name), lit(false)).cast(IntegerType))
     }
-
-  /** O-16: default fills (implemented but dormant by default, matching the
-    * reference where only the boolean fill is live — clickhouse.py:197-198). */
-  def fillDefaults(df: DataFrame): DataFrame = {
-    val fills: Map[String, Any] = df.schema.fields.collect {
-      case f if f.dataType == StringType => f.name -> "_default"
-      case f if numericFamily(f.dataType).contains("int") => f.name -> 0L
-      case f if numericFamily(f.dataType).contains("float") => f.name -> 0.0
-    }.toMap
-    df.na.fill(fills)
-  }
 
   /** O-19: coerce `df` to `target` (the authoritative table schema), adding
     * missing columns, try_cast-ing every mismatched column, and quarantining

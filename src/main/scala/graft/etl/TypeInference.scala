@@ -29,7 +29,8 @@ import org.apache.spark.sql.types._
   * in file order", a documented deterministic stand-in.
   *
   * Cost: ONE aggregate over the batch (map-side combinable, no shuffle of
-  * the data itself).
+  * the data itself), which also yields the row count and the all-null
+  * columns the load path needs.
   */
 object TypeInference {
 
@@ -47,34 +48,45 @@ object TypeInference {
       else StringType
   }
 
-  /** The batch schema with string columns upgraded per the first-non-null
-    * rule. Non-string columns keep Spark's (already stricter) inference. */
-  def refineSchema(df: DataFrame, excludeCols: Set[String] = Set.empty): StructType = {
-    val stringCols = df.schema.fields
+  /** One batch's profile: the row count, the non-null count of every
+    * column, and the DDL schema — the batch schema without its entirely
+    * null columns (§1.2: they do not participate in DDL that batch), with
+    * string columns upgraded per the first-non-null rule. Non-string
+    * columns keep Spark's (already stricter) inference. */
+  final case class Profile(rows: Long, nonNull: Map[String, Long], ddlSchema: StructType) {
+    def deadColumns: Seq[String] = nonNull.collect { case (c, 0L) => c }.toSeq
+  }
+
+  /** Profile `df` in ONE aggregate: `count(*)`, `count(c)` per column and
+    * the deterministic first-value pick of every string column not in
+    * `excludeCols`. */
+  def profile(df: DataFrame, excludeCols: Set[String] = Set.empty): Profile = {
+    val fields = df.schema.fields.toIndexedSeq
+    val sniffCols = fields
       .filter(f => f.dataType == StringType && !excludeCols(f.name))
       .map(_.name)
-    if (stringCols.isEmpty) return df.schema
     // deterministic "first": min over (stable key, value) structs — min
     // skips nulls, so only rows where the column is non-null participate
     val stableKey: Option[org.apache.spark.sql.Column] =
       if (df.columns.contains("message_id")) Some(col("message_id")) else None
-    val aggs = stringCols.map { c =>
-      val picked = stableKey match {
+    val picks = sniffCols.map { c =>
+      stableKey match {
         case Some(k) => min(when(col(c).isNotNull, struct(k.as("k"), col(c).as("v"))))
         case None    => min(when(col(c).isNotNull, struct(col(c).as("v"))))
       }
-      picked.as(c)
-    }.toIndexedSeq
-    val row = df.agg(aggs.head, aggs.tail: _*).head()
-    val sniffed: Map[String, DataType] = stringCols.zipWithIndex.map { case (c, i) =>
-      c -> (if (row.isNullAt(i)) StringType
-            else sniff(row.getStruct(i).getAs[String]("v")))
+    }
+    val row = df.agg(count(lit(1)), fields.map(f => count(col(f.name))) ++ picks: _*).head()
+    val nonNull = fields.indices.map(i => fields(i).name -> row.getLong(1 + i)).toMap
+    val sniffed: Map[String, DataType] = sniffCols.zipWithIndex.map { case (c, i) =>
+      val j = 1 + fields.size + i
+      c -> (if (row.isNullAt(j)) StringType else sniff(row.getStruct(j).getAs[String]("v")))
     }.toMap
-    StructType(df.schema.fields.map { f =>
+    val ddl = StructType(fields.filter(f => nonNull(f.name) > 0).map { f =>
       sniffed.get(f.name) match {
         case Some(dt) if dt != StringType => StructField(f.name, dt, nullable = true)
         case _                            => f
       }
     })
+    Profile(row.getLong(0), nonNull, ddl)
   }
 }

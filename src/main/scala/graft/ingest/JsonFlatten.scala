@@ -24,9 +24,9 @@ import graft.util.Names
   * later becomes NULL under the table-schema-wins alignment).
   *
   * At 100 TB this matters: the flatten is a pure narrow projection (no
-  * shuffle), pushdown-friendly, and the only action ever run is an optional
-  * bounded `max(size(...))` aggregate per array column when the caller asks
-  * us to observe array lengths (one cheap scan, map-side combined).
+  * shuffle), pushdown-friendly, and the only action ever run is one
+  * bounded `max(size(...))` aggregate over the array columns (one cheap
+  * scan, map-side combined).
   */
 object JsonFlatten {
 
@@ -74,20 +74,12 @@ object JsonFlatten {
     }.map { case (n, c) => c.as(n) }
   }
 
-  /** Flatten a DataFrame. If `observeArrayLens`, run one aggregate to find
-    * the true max length of every (top-level-reachable) array column so the
-    * positional expansion matches the reference exactly; otherwise use
-    * `defaultLen`. */
-  def flatten(
-      df: DataFrame,
-      observeArrayLens: Boolean = true,
-      defaultLen: Int = DefaultMaxArrayLen
-  ): DataFrame = {
-    val lens =
-      if (observeArrayLens) observeArrayLengths(df)
-      else Map.empty[String, Int]
-    df.select(flattenColumns(df.schema, lens, defaultLen): _*)
-  }
+  /** Flatten a DataFrame. One aggregate finds the true max length of every
+    * (top-level-reachable) array column, so the positional expansion
+    * matches the reference exactly; `defaultLen` covers array paths the
+    * observation does not reach. */
+  def flatten(df: DataFrame, defaultLen: Int = DefaultMaxArrayLen): DataFrame =
+    df.select(flattenColumns(df.schema, observeArrayLengths(df), defaultLen): _*)
 
   /** One pass computing max(size(arr)) for every array path in the schema.
     * Arrays nested under other arrays are sized via transform+max so the

@@ -3,7 +3,8 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Sources (reference O-1..O-3).
+/** Sources (reference O-1, O-2; the O-3 parquet branch is a plain
+  * `spark.read.parquet`).
   *
   * The reference shells out to `aws s3 cp --recursive` then reads files one
   * by one, single-threaded (seghouse/util/aws_wrapper.py:10-26,
@@ -23,18 +24,4 @@ object Readers {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
     schema.fold(r.json(path))(s => r.schema(s).json(path))
   }
-
-  /** Parquet branch (reference send_to_warehouse.py:325-328): assumed
-    * pre-flattened, bypasses flatten/decamelize. */
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** Streaming NDJSON directory source — the Structured Streaming variant of
-    * the reference's batch file loop. Requires an explicit schema. */
-  def ndjsonStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).json(dir)
-
-  /** One of the driver-generated testdata tables. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
 }

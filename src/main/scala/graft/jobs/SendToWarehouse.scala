@@ -1,13 +1,11 @@
 package graft.jobs
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.etl.{Normalize, TypeSplit}
+import graft.etl.{Normalize, TypeInference, TypeSplit}
 import graft.ingest.{JsonFlatten, Readers}
 import graft.model.EventSchema._
-import graft.sink.{TableCatalog, WarehouseSink}
 import graft.util.Names
 
 /** Job configuration (reference seghouse/config/configuration.py:22-45):
@@ -71,8 +69,9 @@ final class SendToWarehouseJob(
       val byType = TypeSplit.breakDownByType(flat)
 
       val identities = byType("identify")
-      store(IdentitiesTable, identities)
-      storeUsers(identities)
+      // count(user_id) from the identities profile decides whether users runs
+      if (store(IdentitiesTable, identities).nonNull.getOrElse(UserId, 0L) > 0)
+        sinks.foreach(_.upsertUsers(spark, schema, identities))
       storeTracks(byType("track"))
       store(ScreensTable, byType("screen"))
       store(PagesTable, byType("page"))
@@ -97,53 +96,42 @@ final class SendToWarehouseJob(
     Normalize.withUnixMillis(withExtra)
   }
 
-  private def store(table: String, df: DataFrame,
-      structureTable: Option[String] = None): Unit = {
-    if (df.isEmpty) return
-    val pruned = dropAllNullColumns(df)
-    // reference first-non-null type inference (dataframe_util.py:43-51):
-    // string columns whose first value is numeric/boolean define the DDL
-    // type for new columns; the authoritative table schema then wins at
-    // insert time and non-conforming cells become misfits (O-19)
-    val refined = graft.etl.TypeInference.refineSchema(pruned,
-      excludeCols = Set(MessageId, "anonymous_id", UserId, "ip", "channel",
-        "write_key", TypeCol, EventCol, OriginalEventCol))
-    // O-35: DDL side effect on the batch's own table (groups/aliases)
-    structureTable.foreach(st => sinks.foreach(_.ensureStructure(schema, st, refined)))
-    sinks.foreach(_.insertDf(spark, schema, table, pruned, ddlSchema = Some(refined)))
-  }
+  /** Columns the first-non-null rule never retypes (ids and names). */
+  private val SniffExcluded = Set(MessageId, "anonymous_id", UserId, "ip", "channel",
+    "write_key", TypeCol, EventCol, OriginalEventCol)
 
-  private def storeUsers(identities: DataFrame): Unit = {
-    if (identities.isEmpty) return
-    sinks.foreach(_.upsertUsers(spark, schema, identities))
+  /** Store one table's rows to every sink. ONE profiling aggregate yields
+    * the row count (an empty table is skipped), the all-null columns
+    * (dropped: they do not participate in DDL that batch, §1.2) and the
+    * DDL schema by the reference's first-non-null type inference
+    * (dataframe_util.py:43-51); the authoritative table schema then wins
+    * at insert time and non-conforming cells become misfits (O-19). */
+  private def store(table: String, df: DataFrame,
+      structureTable: Option[String] = None): TypeInference.Profile = {
+    val profile = TypeInference.profile(df, SniffExcluded)
+    if (profile.rows > 0) {
+      val pruned = df.drop(profile.deadColumns: _*)
+      // O-35: DDL side effect on the batch's own table (groups/aliases)
+      structureTable.foreach(st =>
+        sinks.foreach(_.ensureTableStructure(schema, st, profile.ddlSchema)))
+      sinks.foreach(_.insertDf(spark, schema, table, pruned, ddlSchema = Some(profile.ddlSchema)))
+    }
+    profile
   }
 
   private def storeTracks(tracksRaw: DataFrame): Unit = {
-    if (tracksRaw.isEmpty) return
     if (!tracksRaw.columns.contains(EventCol)) { store(TracksTable, tracksRaw); return }
     val tracks = Normalize.normalizeEventName(tracksRaw)
       .persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // shared tracks table takes the allowlist+prefix projection (O-7)
-      store(TracksTable,
+      val shared = store(TracksTable,
         Normalize.selectTracksColumns(tracks, conf.extraTimestamps.keys.toSeq))
       // O-33: per-event-name fan-out; reserved-name collision -> esc_ prefix
-      TypeSplit.distinctEventNames(tracks).foreach { e =>
+      if (shared.rows > 0) TypeSplit.distinctEventNames(tracks).foreach { e =>
         val tableName = if (DefaultTables.contains(e)) s"esc_$e" else e
         store(tableName, TypeSplit.filterEvent(tracks, e))
       }
     } finally { tracks.unpersist(); () }
-  }
-
-  /** §1.2: columns entirely null in a batch do not participate in DDL that
-    * batch — computed in ONE aggregate over the persisted batch, not a
-    * per-column scan. */
-  private def dropAllNullColumns(df: DataFrame): DataFrame = {
-    val cols = df.columns
-    if (cols.isEmpty) return df
-    val aggs = cols.map(c => count(col(c)).as(c)).toIndexedSeq
-    val row  = df.agg(aggs.head, aggs.tail: _*).head()
-    val dead = cols.zipWithIndex.collect { case (c, i) if row.getLong(i) == 0L => c }
-    df.drop(dead.toIndexedSeq: _*)
   }
 }

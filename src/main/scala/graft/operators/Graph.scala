@@ -197,8 +197,8 @@ object Graph {
       // this equals size(array_intersect(...)) with no per-row hash set,
       // boxing, or materialized intersection array
       .select(graft.plans.SketchFunctions.sortedIntersectCount(
-        coalesce(col("_nu"), expr("CAST(array() AS array<bigint>)")),
-        coalesce(col("_nv"), expr("CAST(array() AS array<bigint>)"))).as("_c"))
+        coalesce(col("_nu"), typedLit(Array.empty[Long])),
+        coalesce(col("_nv"), typedLit(Array.empty[Long]))).as("_c"))
       .agg(coalesce(sum(col("_c")), lit(0L)).as("n_triangles"))
     val stats = deg.agg(
       count(lit(1)).as("n_nodes"),
@@ -272,8 +272,8 @@ object Graph {
       // fused sorted-merge count (r16): equals size(array_intersect(...))
       // on these sorted-unique bounded lists — see triangleStats
       .select(graft.plans.SketchFunctions.sortedIntersectCount(
-        coalesce(col("_nu"), expr("CAST(array() AS array<bigint>)")),
-        coalesce(col("_nv"), expr("CAST(array() AS array<bigint>)"))).as("_c"))
+        coalesce(col("_nu"), typedLit(Array.empty[Long])),
+        coalesce(col("_nv"), typedLit(Array.empty[Long]))).as("_c"))
       .agg(coalesce(sum(col("_c")), lit(0L)).as("n_triangles_capped"))
     val capWedges = lit(maxOut.toLong * (maxOut - 1L) / 2L)
     val census = ranked.groupBy(col("s")).agg(max(col("rn")).cast("long").as("dout"))

@@ -320,7 +320,13 @@ object NearDup {
 
   /** Banding + candidate + verification stages of [[minhashLshPairs]],
     * over a precomputed [[minhashSigs]] frame (which must carry at
-    * least bands·rowsPerBand signature slots). */
+    * least bands·rowsPerBand signature slots).
+    *
+    * PRECONDITION: each row's `sh` column must be SORTED ASCENDING and
+    * DUPLICATE-FREE, as [[minhashSigs]] builds it. Verification counts
+    * the intersection with a merge walk (`sortedIntersectCount`), so an
+    * unsorted or repeated `sh` yields wrong counts with no error; only
+    * nullable elements are rejected (at analysis). */
   def minhashLshPairsFromSigs(
       sigs: DataFrame,
       bands: Int,

@@ -642,7 +642,8 @@ case class BloomMightContain(child: Expression, bloomBytes: Array[Byte])
   * [[PortableShingleHashes]] emit sorted-deduped sets, and the triangle
   * adjacency lists are `sort_array(collect_list(...))` over distinct
   * arcs. On such inputs the merge count equals
-  * `size(array_intersect(a, b))` exactly. */
+  * `size(array_intersect(a, b))` exactly. The non-null half is enforced:
+  * inputs typed `containsNull = true` fail analysis. */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
 
@@ -651,10 +652,13 @@ case class SortedIntersectCount(left: Expression, right: Expression)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      // a null element would read as 0 and diverge from array_intersect:
+      // nullable elements fail analysis instead of miscounting
+      case (ArrayType(LongType, false), ArrayType(LongType, false)) =>
         TypeCheckResult.TypeCheckSuccess
       case other => TypeCheckResult.TypeCheckFailure(
-        s"graft_sorted_intersect_count requires two array<bigint> inputs, got $other")
+        "graft_sorted_intersect_count requires two array<bigint> inputs with " +
+          s"non-null elements (containsNull = false), got $other")
     }
 
   override def nullSafeEval(l: Any, r: Any): Any = {

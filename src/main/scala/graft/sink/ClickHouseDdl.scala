@@ -151,8 +151,7 @@ class ClickHouseWarehouse(
   import scala.util.Using
   import org.apache.spark.sql.{DataFrame, SparkSession}
   import org.apache.spark.sql.functions.col
-  import graft.etl.{Coerce, Dedup}
-  import graft.model.EventSchema._
+  import graft.etl.Dedup
 
   // ClickHouse identifiers are case-sensitive; the reference passes the
   // schema name through untouched (clickhouse.py:61)
@@ -214,20 +213,13 @@ class ClickHouseWarehouse(
       "Table .{0,200}(doesn't|does not) exist".r.findFirstIn(msg).isDefined
   }
 
-  /** Users upsert, ClickHouse-style: dedupe the batch to per-user winners
+  /** Users merge, ClickHouse-style: dedupe the batch to per-user winners
     * and INSERT — ReplacingMergeTree(ver) resolves versions server-side
     * (clickhouse.py:95-123), so there is no read-back, no truncate, and no
-    * staging swap (those are the ANSI base class's compensations for
+    * staging swap (those are the shared protocol's compensations for
     * engines without versioned replacement). */
-  override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
-    val incoming = Dedup.usersFromIdentities(identities)
-    if (incoming.isEmpty) return
-    val authoritative = ensureTableStructure(db, UsersTable, incoming.schema)
-    val result = Coerce.coerce(incoming, authoritative, UsersTable)
-    try {
-      val winners = Dedup.lastWriteWins(
-        result.main, Seq(UserId), Ver, Seq(col(MessageId).desc))
-      jdbcWrite(winners, db, UsersTable)
-    } finally result.unpersist()
-  }
+  override protected def mergeUsers(spark: SparkSession, db: String,
+      authoritative: StructType, incoming: DataFrame): Unit =
+    append(db, UsersTable,
+      Dedup.lastWriteWins(incoming, Seq(UserId), Ver, Seq(col(MessageId).desc)))
 }

@@ -7,17 +7,13 @@ import scala.collection.mutable
 import scala.util.Using
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.etl.{Coerce, Dedup}
-import graft.model.EventSchema._
-
 /** JDBC warehouse sink — the "Structured Streaming + JDBC sink" shape: the
-  * same schema-evolving insert protocol as the parquet sink, but DDL runs
-  * over a JDBC connection exactly like the reference drives ClickHouse
-  * (CREATE SCHEMA / CREATE TABLE IF missing / metadata describe / ALTER
-  * TABLE ADD COLUMN — clickhouse.py:59-191), and data lands via Spark's
+  * shared [[Warehouse]] load protocol, with DDL run over a JDBC
+  * connection exactly like the reference drives ClickHouse (CREATE
+  * SCHEMA / CREATE TABLE IF missing / metadata describe / ALTER TABLE ADD
+  * COLUMN — clickhouse.py:59-191), and data lands via Spark's
   * distributed JDBC writer (each partition opens its own connection, so
   * the insert parallelism scales with the cluster, unlike the reference's
   * single synchronous socket).
@@ -122,10 +118,10 @@ class JdbcWarehouse(
   protected def addColumnSql(db: String, t: String, f: StructField): String =
     s"ALTER TABLE ${tableRef(db, t)} ADD COLUMN ${q(f.name)} ${typeSql(f.dataType)}"
 
-  /** CREATE TABLE if absent (memoized), then ALTER TABLE ADD COLUMN for
+  /** CREATE TABLE if absent, then ALTER TABLE ADD COLUMN for
     * every new column — append-only evolution, O-27/O-30. Returns the
     * post-evolution schema. */
-  def ensureTableStructure(db: String, t: String, batchSchema: StructType): StructType = {
+  override def ensureTableStructure(db: String, t: String, batchSchema: StructType): StructType = {
     // not memoized, same reasoning as TableCatalog.ensureTableStructure:
     // the describe must stay fresh under concurrent evolution
     describe(db, t) match {
@@ -148,87 +144,42 @@ class JdbcWarehouse(
     }
   }
 
-  override def ensureStructure(db: String, t: String, ddlSchema: StructType): Unit = {
-    ensureTableStructure(db, t, ddlSchema); ()
-  }
-
-  protected def jdbcWrite(df: DataFrame, db: String, t: String): Unit =
-    df.write.mode("append").jdbc(url, tableRef(db, t), props)
-
-  def read(spark: SparkSession, db: String, t: String): DataFrame =
+  override def read(spark: SparkSession, db: String, t: String): DataFrame =
     spark.read.jdbc(url, tableRef(db, t), props)
 
-  override def insertDf(
-      spark: SparkSession,
-      db: String,
-      t: String,
-      batch: DataFrame,
-      partitionByDate: Boolean = true, // physical layout is the DB's concern
-      ddlSchema: Option[StructType] = None
-  ): Long = {
-    if (batch.isEmpty) return 0L
-    val authoritative = ensureTableStructure(db, t, ddlSchema.getOrElse(batch.schema))
-    val result = Coerce.coerce(batch, authoritative, t)
-    try {
-      val misfits = Dedup.dedupMisfits(result.misfits).persist()
-      val n = misfits.count()
-      if (n > 0) {
-        ensureTableStructure(db, MisfitsTable, misfits.schema)
-        jdbcWrite(misfits, db, MisfitsTable)
-      }
-      misfits.unpersist()
-      jdbcWrite(result.main, db, t)
-      n
-    } finally result.unpersist()
-  }
+  override protected def append(db: String, t: String, rows: DataFrame): Unit =
+    rows.write.mode("append").jdbc(url, tableRef(db, t), props)
 
-  override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
-    val incoming = Dedup.usersFromIdentities(identities)
-    if (incoming.isEmpty) return
-    val authoritative = ensureTableStructure(db, UsersTable, incoming.schema)
-    val result = Coerce.coerce(incoming, authoritative, UsersTable)
-    try {
-      val existing: Option[DataFrame] = describe(db, UsersTable).map(_ => read(spark, db, UsersTable))
-      val aligned = existing match {
-        case Some(ex) if ex.columns.nonEmpty =>
-          Coerce.coerce(Coerce.addMissingColumns(ex, authoritative), authoritative,
-            UsersTable, persistIntermediate = false).main
-            .unionByName(result.main, allowMissingColumns = true)
-        case _ => result.main
-      }
-      val winners = Dedup.lastWriteWins(aligned, Seq(UserId), Ver, Seq(col(MessageId).desc))
-        .localCheckpoint(true) // materialize BEFORE touching the sink table
-      // Stage-then-swap: land winners in a staging table via the distributed
-      // writer, then replace the live table's rows in ONE transaction — a
-      // crash mid-upsert can no longer leave users empty (the parquet sink
-      // swaps directories for the same reason; the reference never truncates,
-      // ReplacingMergeTree does the replacement server-side).
-      val stage = UsersTable + "__stage"
-      if (describe(db, stage).isDefined) withConn { c =>
-        Using.resource(c.createStatement())(_.executeUpdate(s"DROP TABLE ${tableRef(db, stage)}"))
-      }
-      val colsSql = winners.schema.fields
-        .map(f => s"${q(f.name)} ${typeSql(f.dataType)}").mkString(", ")
-      withConn { c =>
-        Using.resource(c.createStatement())(
-          _.executeUpdate(s"CREATE TABLE ${tableRef(db, stage)} ($colsSql)"))
-      }
-      jdbcWrite(winners, db, stage)
-      val colList = winners.schema.fieldNames.map(q).mkString(", ")
-      withConn { c =>
-        c.setAutoCommit(false)
-        try {
-          Using.resource(c.createStatement()) { st =>
-            st.executeUpdate(s"DELETE FROM ${tableRef(db, UsersTable)}")
-            st.executeUpdate(
-              s"INSERT INTO ${tableRef(db, UsersTable)} ($colList) " +
-                s"SELECT $colList FROM ${tableRef(db, stage)}")
-          }
-          c.commit()
-        } catch { case e: Throwable => c.rollback(); throw e }
-        finally c.setAutoCommit(true)
-        Using.resource(c.createStatement())(_.executeUpdate(s"DROP TABLE ${tableRef(db, stage)}"))
-      }
-    } finally result.unpersist()
+  /** Stage-then-swap: land the rows in a staging table via the distributed
+    * writer, then replace the live table's rows in ONE transaction — a
+    * crash mid-replace can never leave the table empty (the parquet sink
+    * swaps directories for the same reason). */
+  override protected def replace(spark: SparkSession, db: String, t: String, rows: DataFrame): Unit = {
+    val stage = t + "__stage"
+    if (describe(db, stage).isDefined) withConn { c =>
+      Using.resource(c.createStatement())(_.executeUpdate(s"DROP TABLE ${tableRef(db, stage)}"))
+    }
+    val colsSql = rows.schema.fields
+      .map(f => s"${q(f.name)} ${typeSql(f.dataType)}").mkString(", ")
+    withConn { c =>
+      Using.resource(c.createStatement())(
+        _.executeUpdate(s"CREATE TABLE ${tableRef(db, stage)} ($colsSql)"))
+    }
+    append(db, stage, rows)
+    val colList = rows.schema.fieldNames.map(q).mkString(", ")
+    withConn { c =>
+      c.setAutoCommit(false)
+      try {
+        Using.resource(c.createStatement()) { st =>
+          st.executeUpdate(s"DELETE FROM ${tableRef(db, t)}")
+          st.executeUpdate(
+            s"INSERT INTO ${tableRef(db, t)} ($colList) " +
+              s"SELECT $colList FROM ${tableRef(db, stage)}")
+        }
+        c.commit()
+      } catch { case e: Throwable => c.rollback(); throw e }
+      finally c.setAutoCommit(true)
+      Using.resource(c.createStatement())(_.executeUpdate(s"DROP TABLE ${tableRef(db, stage)}"))
+    }
   }
 }

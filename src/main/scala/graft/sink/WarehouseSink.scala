@@ -1,26 +1,22 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.etl.{Coerce, Dedup}
 import graft.model.EventSchema._
 
-/** The warehouse load path (reference O-24, O-25, O-31, O-32, O-28/O-21).
+/** Parquet lakehouse storage under the shared [[Warehouse]] load protocol
+  * (reference O-24, O-25).
   *
   * Physical layout mirrors what the reference delegates to ClickHouse
   * MergeTree: date partitioning (`PARTITION BY toDate(timestamp)`,
   * clickhouse.py:86) becomes `partitionBy(event_date)`, and the
   * `(timestamp, message_id)` sort key (clickhouse.py:87) becomes
   * `sortWithinPartitions` — giving parquet row-group locality /
-  * min-max-pruning on the same keys CH clusters on.
-  *
-  * Insert protocol (clickhouse.py:193-215): the table schema is
-  * authoritative; the batch is aligned (missing columns added as NULL),
-  * coerced with misfit quarantine, then appended. The reference's
-  * copy/pivot-to-rows dance disappears: one aligned projection + one
-  * distributed partitioned write.
+  * min-max-pruning on the same keys CH clusters on. The reference's
+  * copy/pivot-to-rows insert dance disappears: one aligned projection +
+  * one distributed partitioned write.
   */
 final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
 
@@ -28,54 +24,26 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
 
   override def createDatabase(db: String): Unit = catalog.createDatabase(db)
 
-  override def ensureStructure(db: String, t: String, ddlSchema: StructType): Unit = {
-    catalog.ensureTableStructure(db, t, ddlSchema); ()
-  }
+  override def ensureTableStructure(db: String, t: String, batchSchema: StructType): StructType =
+    catalog.ensureTableStructure(db, t, batchSchema)
 
-  /** O-31: insert a batch into `db.t`, evolving the schema (append-only) and
-    * quarantining coercion failures into the misfits table. Returns the
-    * number of misfit rows written. */
-  override def insertDf(
-      spark: SparkSession,
-      db: String,
-      t: String,
-      batch: DataFrame,
-      partitionByDate: Boolean = true,
-      ddlSchema: Option[StructType] = None
-  ): Long = {
-    if (batch.isEmpty) return 0L
-    val authoritative = catalog.ensureTableStructure(db, t, ddlSchema.getOrElse(batch.schema))
-    val result        = Coerce.coerce(batch, authoritative, t)
-    try {
-      val misfitCount = writeMisfits(spark, db, result.misfits)
-      val withPart =
-        if (partitionByDate && authoritative.fieldNames.contains(Timestamp))
-          result.main.withColumn(PartitionCol, to_date(col(Timestamp)))
-        else result.main
-      val writer =
-        if (withPart.columns.contains(PartitionCol))
-          withPart
-            .sortWithinPartitions(col(Timestamp), col(MessageId))
-            .write.partitionBy(PartitionCol)
-        else withPart.write
-      writer.mode("append").parquet(catalog.tablePath(db, t))
-      misfitCount
-    } finally result.unpersist()
-  }
+  override def read(spark: SparkSession, db: String, t: String): DataFrame =
+    catalog.read(spark, db, t)
 
-  /** O-32: lazy-create + append the misfits dead-letter table (deduped on
-    * its CH sort key first, O-23). */
-  def writeMisfits(spark: SparkSession, db: String, misfits: DataFrame): Long = {
-    val deduped = Dedup.dedupMisfits(misfits).persist()
-    try {
-      val n = deduped.count()
-      if (n > 0) {
-        catalog.ensureTableStructure(db, MisfitsTable, deduped.schema)
-        deduped.write.mode("append").parquet(catalog.tablePath(db, MisfitsTable))
-      }
-      n
-    } finally { deduped.unpersist(); () }
-  }
+  /** `event_date` partitions sorted by `(timestamp, message_id)` when the
+    * table has a timestamp; a plain write otherwise (misfits). */
+  private def layout(rows: DataFrame): DataFrameWriter[Row] =
+    if (rows.columns.contains(Timestamp))
+      rows.withColumn(PartitionCol, to_date(col(Timestamp)))
+        .sortWithinPartitions(col(Timestamp), col(MessageId))
+        .write.partitionBy(PartitionCol)
+    else rows.write
+
+  override protected def append(db: String, t: String, rows: DataFrame): Unit =
+    layout(rows).mode("append").parquet(catalog.tablePath(db, t))
+
+  override protected def replace(spark: SparkSession, db: String, t: String, rows: DataFrame): Unit =
+    stageThenSwap(spark, db, t)(tmp => rows.write.mode("overwrite").parquet(tmp))
 
   /** O-22, deferred half: the explicit analog of ClickHouse's background
     * merge for `ReplacingMergeTree() ORDER BY (timestamp, message_id)`
@@ -98,23 +66,14 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
       .localCheckpoint(true) // materialize before replacing the source files
     val before = current.count()
     val after  = deduped.count()
-    val withPart =
-      if (deduped.columns.contains(PartitionCol)) deduped
-      else if (deduped.columns.contains(Timestamp))
-        deduped.withColumn(PartitionCol, to_date(col(Timestamp)))
-      else deduped
-    val writer =
-      if (withPart.columns.contains(PartitionCol) && dedupKeys.contains(Timestamp))
-        withPart.sortWithinPartitions(col(Timestamp), col(MessageId))
-          .write.partitionBy(PartitionCol)
-      else withPart.write
-    replaceTableContents(spark, db, t)(tmp => writer.mode("overwrite").parquet(tmp))
+    stageThenSwap(spark, db, t)(tmp => layout(deduped).mode("overwrite").parquet(tmp))
     before - after
   }
 
-  /** Stage-then-swap replacement of a table directory, preserving the
-    * catalog's authoritative schema marker. */
-  private def replaceTableContents(spark: SparkSession, db: String, t: String)(
+  /** Stage-then-swap replacement of a table directory (parquet has no
+    * transactional replace), preserving the catalog's authoritative
+    * schema marker. */
+  private def stageThenSwap(spark: SparkSession, db: String, t: String)(
       write: String => Unit): Unit = {
     val target = catalog.tablePath(db, t)
     val tmp    = target + "__staged"
@@ -129,33 +88,5 @@ final class WarehouseSink(val catalog: TableCatalog) extends Warehouse {
     fs.rename(tmpPath, tgtPath)
     schemaJson.foreach(s => catalog.ensureTableStructure(db, t, s))
     ()
-  }
-
-  /** O-21/O-28: last-write-wins users upsert — the ReplacingMergeTree(ver)
-    * equivalent. Read current users ∪ incoming, keep the max-`ver` row per
-    * user_id, atomically replace. The users table is small relative to
-    * events (bounded by |distinct users|), so read-merge-overwrite per
-    * batch is the right trade (SURVEY §7.3 hard part 2). */
-  override def upsertUsers(spark: SparkSession, db: String, identities: DataFrame): Unit = {
-    val incoming = Dedup.usersFromIdentities(identities)
-    if (incoming.isEmpty) return
-    val authoritative = catalog.ensureTableStructure(db, UsersTable, incoming.schema)
-    val result        = Coerce.coerce(incoming, authoritative, UsersTable)
-    try {
-      writeMisfits(spark, db, result.misfits)
-      val existing = catalog.read(spark, db, UsersTable)
-      val aligned =
-        if (existing.schema.fields.isEmpty) result.main
-        else {
-          val exCoerced = Coerce.coerce(Coerce.addMissingColumns(existing, authoritative),
-            authoritative, UsersTable, persistIntermediate = false)
-          exCoerced.main.unionByName(result.main, allowMissingColumns = true)
-        }
-      val winners = Dedup.lastWriteWins(aligned, Seq(UserId), Ver, Seq(col(MessageId).desc))
-      // stage-then-swap: parquet has no transactional replace; a crash
-      // never leaves a truncated users table
-      replaceTableContents(spark, db, UsersTable)(tmp =>
-        winners.write.mode("overwrite").parquet(tmp))
-    } finally result.unpersist()
   }
 }

@@ -128,7 +128,7 @@ class ClickHouseProtocolSpec extends AnyFunSuite {
     val fake = new FakeClickHouse
     val wh = new ClickHouseWarehouse("jdbc:clickhouse://fake:8123/") {
       override protected def connect(): Connection = fake.newConnection()
-      override protected def jdbcWrite(df: DataFrame, db: String, t: String): Unit =
+      override protected def append(db: String, t: String, df: DataFrame): Unit =
         fake.record(s"INSERT INTO `$db`.`$t` VALUES /* ${df.count()} rows */")
     }
     (fake, wh)
@@ -216,7 +216,7 @@ class ClickHouseProtocolSpec extends AnyFunSuite {
     val inserted = mutable.ArrayBuffer[(String, Long, String)]()
     val wh = new ClickHouseWarehouse("jdbc:clickhouse://fake:8123/") {
       override protected def connect(): Connection = fake.newConnection()
-      override protected def jdbcWrite(df: DataFrame, db: String, t: String): Unit = {
+      override protected def append(db: String, t: String, df: DataFrame): Unit = {
         fake.record(s"INSERT INTO `$db`.`$t` VALUES /* ${df.count()} rows */")
         df.select("user_id", "ver", "traits_name").collect().foreach(r =>
           inserted += ((r.getString(0), r.getLong(1), r.getString(2))))
@@ -272,6 +272,24 @@ class ClickHouseProtocolSpec extends AnyFunSuite {
     assert(create.contains("ENGINE = ReplacingMergeTree()"))
     assert(create.contains("ORDER BY (`message_id`, `table_name`, `column_name`)"))
     assert(st.exists(_.startsWith("INSERT INTO `seg_app`.`misfits` VALUES")))
+  }
+
+  test("users coercion misfits route to the misfits table") {
+    val (fake, wh) = harness()
+    // batch 1 creates users with traits_tier Int64; in batch 2 the same
+    // trait arrives as a word -> coercion misfit with table_name users
+    wh.upsertUsers(spark, "seg_app", Seq(("m1", "u1", "2024-05-01 10:00:00", 3L))
+      .toDF("message_id", "user_id", "timestamp", "traits_tier")
+      .withColumn("timestamp", to_timestamp(col("timestamp"))))
+    fake.statements.clear()
+    wh.upsertUsers(spark, "seg_app", Seq(("m2", "u1", "2024-05-01 11:00:00", "gold"))
+      .toDF("message_id", "user_id", "timestamp", "traits_tier")
+      .withColumn("timestamp", to_timestamp(col("timestamp"))))
+
+    val st = fake.statements.toVector
+    assert(st.exists(_.startsWith("CREATE TABLE IF NOT EXISTS `seg_app`.`misfits`")))
+    assert(st.exists(_.startsWith("INSERT INTO `seg_app`.`misfits` VALUES /* 1 rows */")))
+    assert(st.exists(_.startsWith("INSERT INTO `seg_app`.`users` VALUES /* 1 rows */")))
   }
 
   test("describe maps ONLY unknown-table errors to None; others propagate") {

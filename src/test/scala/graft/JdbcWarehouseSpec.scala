@@ -33,7 +33,7 @@ class JdbcWarehouseSpec extends AnyFunSuite {
       ("m2", ts("2024-01-01 00:00:02"), "nope")
     ).toDF("message_id", "timestamp", "payload")
     // DDL schema says payload BIGINT (first-non-null rule) -> "nope" misfit
-    val ddl = graft.etl.TypeInference.refineSchema(b1)
+    val ddl = graft.etl.TypeInference.profile(b1).ddlSchema
     val misfits = wh.insertDf(spark, "ns", "tracks", b1, ddlSchema = Some(ddl))
     assert(misfits == 1)
 
@@ -49,7 +49,7 @@ class JdbcWarehouseSpec extends AnyFunSuite {
     val b2 = Seq(("m3", ts("2024-01-02 00:00:00"), "7", 9.5))
       .toDF("message_id", "timestamp", "payload", "score")
     wh.insertDf(spark, "ns", "tracks", b2,
-      ddlSchema = Some(graft.etl.TypeInference.refineSchema(b2)))
+      ddlSchema = Some(graft.etl.TypeInference.profile(b2).ddlSchema))
     val evolved = wh.read(spark, "ns", "tracks")
     assert(evolved.columns.contains("score"))
     assert(evolved.count() == 3)
@@ -132,6 +132,26 @@ class JdbcWarehouseSpec extends AnyFunSuite {
     assert(users.length == 2)
     assert(users(0).getAs[String]("message_id") == "m3")
     assert(users(1).getAs[String]("message_id") == "m2")
+  }
+
+  test("users coercion misfits land in the misfits table over JDBC") {
+    val (wh, _) = freshDb()
+    wh.createDatabase("ns")
+    // batch 1 creates users with traits_tier BIGINT
+    wh.upsertUsers(spark, "ns", Seq(("m1", "u1", ts("2024-01-01 00:00:01"), 3L))
+      .toDF("message_id", "user_id", "timestamp", "traits_tier"))
+    // batch 2: the same trait arrives as a word -> quarantined, row kept
+    wh.upsertUsers(spark, "ns", Seq(("m2", "u1", ts("2024-01-02 00:00:00"), "gold"))
+      .toDF("message_id", "user_id", "timestamp", "traits_tier"))
+
+    val mf = wh.read(spark, "ns", "misfits").collect()
+    assert(mf.length == 1)
+    assert(mf.head.getAs[String]("table_name") == "users")
+    assert(mf.head.getAs[String]("column_name") == "traits_tier")
+    assert(mf.head.getAs[String]("column_value") == "gold")
+    val users = wh.read(spark, "ns", "users").collect()
+    assert(users.length == 1 && users.head.getAs[String]("message_id") == "m2")
+    assert(users.head.isNullAt(users.head.fieldIndex("traits_tier")))
   }
 
   test("full pipeline into a JDBC warehouse (multi-sink with parquet)") {

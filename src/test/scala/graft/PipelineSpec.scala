@@ -3,6 +3,9 @@ package graft
 import java.nio.file.{Files, Path}
 import java.nio.charset.StandardCharsets
 
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.jobs.{JobConf, SendToWarehouseJob}
@@ -184,5 +187,63 @@ class PipelineSpec extends AnyFunSuite {
     val c1 = new TableCatalog(wh1.toString).read(spark, "ns", "tracks").count()
     val c2 = new TableCatalog(wh2.toString).read(spark, "ns", "tracks").count()
     assert(c1 == 3 && c2 == 3)
+  }
+
+  test("a column entirely null in a batch stays out of DDL until a batch carries it") {
+    val src1 = Files.createTempDirectory("graft_src_null1")
+    val src2 = Files.createTempDirectory("graft_src_null2")
+    val wh   = Files.createTempDirectory("graft_wh_null")
+    writeFixture(src1, "b1.json", Seq(
+      envelope("m-300", "page", "u-1", "2024-01-01T00:00:00.000Z",
+        ""","name":"Home","properties":{"path":"/home","referrer":null}""")))
+    val job = new SendToWarehouseJob(spark, JobConf(warehouseRoots = Seq(wh.toString)), "ns")
+    job.execute(src1.toString)
+    val cat = new TableCatalog(wh.toString)
+    val s1 = cat.describe("ns", "pages").get
+    assert(s1.fieldNames.contains("properties_path"))
+    assert(!s1.fieldNames.contains("properties_referrer"))
+
+    // batch 2 carries values; the row with the smallest message_id holds
+    // "7", so the column is added as BIGINT and "home" is a misfit
+    writeFixture(src2, "b2.json", Seq(
+      envelope("m-302", "page", "u-2", "2024-01-02T00:00:00.000Z",
+        ""","name":"Docs","properties":{"path":"/docs","referrer":"home"}"""),
+      envelope("m-301", "page", "u-2", "2024-01-02T00:00:01.000Z",
+        ""","name":"Docs","properties":{"path":"/docs","referrer":"7"}""")))
+    job.execute(src2.toString)
+    val s2 = cat.describe("ns", "pages").get
+    assert(s2.fieldNames.toSeq == s1.fieldNames.toSeq :+ "properties_referrer")
+    assert(s2("properties_referrer").dataType == LongType)
+    val mf = cat.read(spark, "ns", "misfits").collect()
+    assert(mf.map(r => (r.getAs[String]("message_id"), r.getAs[String]("column_value"))).toSeq ==
+      Seq(("m-302", "home")))
+  }
+
+  test("SendToWarehouseJob.execute stays within its Spark job budget") {
+    // one profiling aggregate per table: a per-table scan that comes back
+    // (an isEmpty, a separate null-column or type-inference pass) adds a
+    // job for each of the fixture's tables and breaks this budget
+    val src = Files.createTempDirectory("graft_src_budget")
+    val wh  = Files.createTempDirectory("graft_wh_budget")
+    writeFixture(src, "batch1.json", fixtureLines)
+    val job = new SendToWarehouseJob(spark, JobConf(warehouseRoots = Seq(wh.toString)), "budget")
+    val tag = "graft.test.budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(tag) == "execute") jobs.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(tag, "execute")
+    try job.execute(src.toString)
+    finally {
+      sc.setLocalProperty(tag, null)
+      ListenerBusAccess.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    // measured with one profiling aggregate per table
+    val budget = 90
+    assert(jobs.get() <= budget, s"${jobs.get()} Spark jobs")
   }
 }

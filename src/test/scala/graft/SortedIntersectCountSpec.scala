@@ -40,7 +40,7 @@ class SortedIntersectCountSpec extends AnyFunSuite {
     }
   }
 
-  test("interpreted eval agrees with codegen result") {
+  test("interpreted eval equals the set-intersection size") {
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     cases.foreach { case (a, b) =>
       val e = graft.plans.SortedIntersectCount(
@@ -53,6 +53,14 @@ class SortedIntersectCountSpec extends AnyFunSuite {
       val expected = a.toSet.intersect(b.toSet).size.toLong
       assert(e.eval(null) == expected, s"a=${a.toSeq} b=${b.toSeq}")
     }
+  }
+
+  test("arrays typed with nullable elements fail analysis") {
+    val df = Seq(1).toDF("x").select(
+      array(lit(1L), lit(null).cast("bigint")).as("a"), array(lit(1L)).as("b"))
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(graft.plans.SketchFunctions.sortedIntersectCount(col("a"), col("b"))))
+    assert(e.getMessage.contains("containsNull = false"))
   }
 
   test("null array inputs yield null, matching size(array_intersect) nullability") {
