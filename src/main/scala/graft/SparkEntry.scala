@@ -2345,12 +2345,12 @@ object SparkEntry {
 
     // Extension — ZONE-MAP DATA SKIPPING on the snapshot store: events
     // land range-clustered on day (the ClickHouse ORDER BY analog,
-    // reference clickhouse.py:86-87) through commitWithStats, which
-    // writes a per-file min/max sidecar in the same pass that counts
-    // rows; the serve then asks readPruned for a 6-day window and reads
-    // ONLY the files whose day range can intersect it — file-granular
-    // skipping BEFORE Spark lists anything, the primary-index story at
-    // 100 TB (a day probe touches O(1) of O(table) files). Hash-exact:
+    // reference clickhouse.py:86-87) through a commit naming a stats
+    // sidecar, which writes per-file min/max bounds from the same facts
+    // that count rows; the serve then asks readPruned for a 6-day
+    // window and reads ONLY the files whose day range can intersect it
+    // — file-granular skipping BEFORE Spark lists anything, the
+    // primary-index story at 100 TB (a day probe touches O(1) of O(table) files). Hash-exact:
     // pruning is lossless by construction, so the windowed aggregate
     // equals DuckDB's full-scan filter. SnapshotSinkSpec asserts the
     // file-count reduction; here the gate checks the answer.
@@ -2360,9 +2360,9 @@ object SparkEntry {
       val ev = events(s, dir).select(
         expr("unix_millis(ts) DIV 86400000").as("day"),
         col("event_type"), col("user_id"), col("value"))
-      SnapshotSink.commitWithStats(
-        ev.repartitionByRange(10, col("day")), root, Seq("day"))
-      SnapshotSink.readPruned(s, root, "day", 19733L, 19738L).df
+      SnapshotSink.commit(ev.repartitionByRange(10, col("day")), root,
+        SnapshotSink.Sidecars(stats = Seq("day")))
+      SnapshotSink.readPruned(s, root, Seq(("day", 19733L, 19738L))).df
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("user_id")).as("n_users"),
@@ -2409,9 +2409,9 @@ object SparkEntry {
     // range-clustered on the Morton z-value of (day, user), so every
     // file spans a narrow range of BOTH dimensions, and the two-range
     // probe (6 days × one user band) prunes files multiplicatively via
-    // SnapshotSink.readPrunedRanges — where a day-sorted layout prunes
-    // on day alone. This is Delta/Iceberg's OPTIMIZE ZORDER BY serve on
-    // the same stats sidecar. Pruning lossless (residual conjunction
+    // SnapshotSink.readPruned over two ranges — where a day-sorted
+    // layout prunes on day alone. This is Delta/Iceberg's OPTIMIZE
+    // ZORDER BY serve on the same stats sidecar. Pruning lossless (residual conjunction
     // re-applied); hash-exact vs the plain two-predicate filter.
     "q160_zorder_pruned_serve" -> ((s, dir) => {
       import graft.sink.SnapshotSink
@@ -2421,9 +2421,9 @@ object SparkEntry {
           col("user_id"), col("event_type"), col("value"))
       val z = graft.operators.ZOrder.zValue(
         col("day") - lit(19723L), col("user_id"))
-      SnapshotSink.commitWithStats(
-        ev.repartitionByRange(16, z), root, Seq("day", "user_id"))
-      SnapshotSink.readPrunedRanges(s, root,
+      SnapshotSink.commit(ev.repartitionByRange(16, z), root,
+        SnapshotSink.Sidecars(stats = Seq("day", "user_id")))
+      SnapshotSink.readPruned(s, root,
           Seq(("day", 19733L, 19738L), ("user_id", 20L, 60L))).df
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -5529,14 +5529,14 @@ object SparkEntry {
       val root = freshStateRoot(s, "q210", dir)
       val ev = events(s, dir).select(col("user_id"), col("event_type"),
         expr("unix_millis(ts) DIV 86400000").as("day"))
-      def keys = graft.plans.SketchFunctions.portableHash64(
-        array(col("user_id").cast("string")))
+      val idx = SnapshotSink.Sidecars(set = Some(SnapshotSink.SetIndex(
+        graft.plans.SketchFunctions.portableHash64(
+          array(col("user_id").cast("string"))), expectedPerFile = 4096)))
       val f1 = Audience.membershipFlags(
           ev.filter(pmod(col("day"), lit(2)) === 0), "user_id", "event_type",
           audienceTypes)
         .withColumn("ver", lit(1L))
-      SnapshotSink.commitWithSetIndex(
-        f1.repartition(8, col("user_id")), root, keys, expectedPerFile = 4096)
+      SnapshotSink.commit(f1.repartition(8, col("user_id")), root, idx)
       val f2 = Audience.membershipFlags(
         ev.filter(pmod(col("day"), lit(2)) === 1), "user_id", "event_type",
         audienceTypes)
@@ -5547,7 +5547,7 @@ object SparkEntry {
         .withColumn("ver", lit(2L))
       SnapshotSink.upsertKeyed(s, root, merged,
         keyCols = Seq("user_id"), verCol = "ver",
-        tieBreak = Seq(col("f0").desc), keys = keys, expectedPerFile = 4096)
+        tieBreak = Seq(col("f0").desc), idx = idx)
       Audience.overlapFromFlags(
         SnapshotSink.read(s, root).drop("ver"), audienceTypes)
     }),
@@ -6000,8 +6000,8 @@ object SparkEntry {
       val train = Sampling.withSplitId(deduped, "doc_id", Seq(0.9, 0.1), salt = "cur3")
         .filter(col("split_id") === 0)
         .select("doc_id", "source", "n_tokens", "score_micros")
-      SnapshotSink.commitWithStats(
-        train.repartitionByRange(4, col("doc_id")), root, Seq("doc_id"))
+      SnapshotSink.commit(train.repartitionByRange(4, col("doc_id")), root,
+        SnapshotSink.Sidecars(stats = Seq("doc_id")))
       SnapshotSink.read(s, root)
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"),
@@ -6025,9 +6025,9 @@ object SparkEntry {
       val ev = events(s, dir).select(
         expr("unix_millis(ts) DIV 86400000").as("day"),
         col("event_type"), col("user_id"), col("value"))
-      SnapshotSink.commitWithStats(
-        ev.repartitionByRange(10, col("day")), root, Seq("day"))
-      SnapshotSink.expireBelow(s, root, "day", 19733L, Seq("day"))
+      val idx = SnapshotSink.Sidecars(stats = Seq("day"))
+      SnapshotSink.commit(ev.repartitionByRange(10, col("day")), root, idx)
+      SnapshotSink.expireBelow(s, root, "day", 19733L, idx)
       SnapshotSink.read(s, root)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), min("day").as("first_day"),
@@ -6052,19 +6052,18 @@ object SparkEntry {
         .select(col("user_id"), unix_millis(col("ts")).as("ver"),
           col("event_type"), col("event_id"),
           expr("unix_millis(ts) DIV 86400000").as("day"))
-      def keys = graft.plans.SketchFunctions.portableHash64(
-        array(col("user_id").cast("string")))
+      val idx = SnapshotSink.Sidecars(set = Some(SnapshotSink.SetIndex(
+        graft.plans.SketchFunctions.portableHash64(
+          array(col("user_id").cast("string"))), expectedPerFile = 4096)))
       val cutoff = 19743L // first 20 days stored, the rest is the batch
       val base = graft.etl.Dedup.lastWriteWins(
           ev.filter(col("day") < cutoff), Seq("user_id"), "ver",
           Seq(col("event_id").desc)).drop("day")
-      SnapshotSink.commitWithSetIndex(
-        base.repartition(8, col("user_id")), root, keys, expectedPerFile = 4096)
+      SnapshotSink.commit(base.repartition(8, col("user_id")), root, idx)
       SnapshotSink.upsertKeyed(s, root,
         ev.filter(col("day") >= cutoff).drop("day"),
         keyCols = Seq("user_id"), verCol = "ver",
-        tieBreak = Seq(col("event_id").desc),
-        keys = keys, expectedPerFile = 4096)
+        tieBreak = Seq(col("event_id").desc), idx = idx)
       SnapshotSink.read(s, root)
         .select(col("user_id"), col("ver"), col("event_type").as("last_event_type"))
         .orderBy("user_id")
@@ -6085,15 +6084,14 @@ object SparkEntry {
       val ev = events(s, dir).select(
         expr("unix_millis(ts) DIV 86400000").as("day"),
         col("event_type"), col("user_id"), col("value"))
-      def keys = graft.plans.SketchFunctions.portableHash64(
-        array(col("user_id").cast("string")))
+      val idx = SnapshotSink.Sidecars(set = Some(SnapshotSink.SetIndex(
+        graft.plans.SketchFunctions.portableHash64(
+          array(col("user_id").cast("string"))), expectedPerFile = 4096)))
       // entity-bucketed layout: a user lands in exactly one bucket file
-      SnapshotSink.commitWithSetIndex(
-        ev.repartition(12, col("user_id")), root, keys, expectedPerFile = 4096)
+      SnapshotSink.commit(ev.repartition(12, col("user_id")), root, idx)
       val h41 = graft.plans.PortableSketch.md5Long(
         "41".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      SnapshotSink.deleteMatching(s, root, h41,
-        pred = col("user_id") === 41L, keys = keys, expectedPerFile = 4096)
+      SnapshotSink.deleteMatching(s, root, h41, pred = col("user_id") === 41L, idx)
       SnapshotSink.read(s, root)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
@@ -6118,9 +6116,8 @@ object SparkEntry {
       val root = freshStateRoot(s, "q153", dir)
       val ev = events(s, dir).select(
         expr("unix_millis(ts) DIV 86400000").as("day"), col("value"))
-      SnapshotSink.commitIndexed(
-        ev.repartitionByRange(10, col("day")), root, Seq("day"), None,
-        sumCols = Seq("value"))
+      SnapshotSink.commit(ev.repartitionByRange(10, col("day")), root,
+        SnapshotSink.Sidecars(stats = Seq("day"), sums = Seq("value")))
       SnapshotSink.aggRangeFromStats(s, root, "day", 19730L, 19739L, "value")
         .df.select(col("n"), money(col("sum")).as("sum_value"))
     }),
@@ -6157,15 +6154,15 @@ object SparkEntry {
       // arrival shape: three interleaved batches (event_id mod — the
       // non-null PK), each internally day-clustered — across batches
       // every file range overlaps every other
+      val idx = SnapshotSink.Sidecars(stats = Seq("day"))
       (0L until 3L).foreach { b =>
         val batch = ev.filter(pmod(col("event_id"), lit(3)) === b)
           .repartitionByRange(4, col("day"))
-        if (b == 0L) SnapshotSink.commitWithStats(batch, root, Seq("day"))
-        else SnapshotSink.appendIndexed(batch, root, Seq("day"), None)
+        if (b == 0L) SnapshotSink.commit(batch, root, idx)
+        else SnapshotSink.append(batch, root, idx)
       }
-      SnapshotSink.compact(s, root, targetFiles = 4,
-        clusterCol = Some("day"), statsCols = Seq("day"))
-      SnapshotSink.readPruned(s, root, "day", 19740L, 19745L).df
+      SnapshotSink.compact(s, root, targetFiles = 4, clusterCol = Some("day"), idx = idx)
+      SnapshotSink.readPruned(s, root, Seq(("day", 19740L, 19745L))).df
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"),
           countDistinct(col("user_id")).as("n_users"),
@@ -6213,13 +6210,13 @@ object SparkEntry {
       val ev = events(s, dir).select(
         expr("unix_millis(ts) DIV 86400000").as("day"),
         col("user_id"), col("event_type"), col("value"))
-      SnapshotSink.commitIndexed(
-        ev.repartitionByRange(10, col("day")), root, Seq("day"),
-        Some((graft.plans.SketchFunctions.portableHash64(
-          array(col("user_id").cast("string"))), 4096L, 0.01)))
+      SnapshotSink.commit(ev.repartitionByRange(10, col("day")), root,
+        SnapshotSink.Sidecars(stats = Seq("day"), set = Some(SnapshotSink.SetIndex(
+          graft.plans.SketchFunctions.portableHash64(
+            array(col("user_id").cast("string"))), 4096L))))
       val probe = graft.plans.PortableSketch.md5Long(
         "41".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      SnapshotSink.readPrunedBoth(s, root, "day", 19728L, 19737L, probe).df
+      SnapshotSink.readPruned(s, root, Seq(("day", 19728L, 19737L)), Some(probe)).df
         .filter(col("user_id") === 41L)
         .groupBy("day")
         .agg(count(lit(1)).as("n"),
@@ -6240,14 +6237,13 @@ object SparkEntry {
       import graft.sink.SnapshotSink
       val root = freshStateRoot(s, "q147", dir)
       val docs = t(s, dir, "documents").select("doc_id", "text", "source")
-      SnapshotSink.commitWithSetIndex(
-        docs.repartitionByRange(16, col("doc_id")), root,
-        keys = graft.plans.SketchFunctions.portableHash64(
-          TextAnalysis.tokens(col("text"))),
-        expectedPerFile = 4096)
+      SnapshotSink.commit(docs.repartitionByRange(16, col("doc_id")), root,
+        SnapshotSink.Sidecars(set = Some(SnapshotSink.SetIndex(
+          graft.plans.SketchFunctions.portableHash64(TextAnalysis.tokens(col("text"))),
+          expectedPerFile = 4096))))
       val probe = graft.plans.PortableSketch.md5Long(
         "dup".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      SnapshotSink.readSetPruned(s, root, probe).df
+      SnapshotSink.readPruned(s, root, probe = Some(probe)).df
         .filter(array_contains(TextAnalysis.tokens(col("text")), "dup"))
         .select(col("doc_id"), col("source"),
           TextAnalysis.tokenCount(col("text")).cast("long").as("n_tokens"))

@@ -13,7 +13,7 @@ import org.apache.spark.util.sketch.BloomFilter
 /** PER-GROUP BLOOM FILTER aggregate over pre-hashed longs — the build
   * side of a SET SKIPPING INDEX (ClickHouse's `tokenbf_v1`/`bloom_filter`
   * data-skipping indexes, the reference's warehouse): one filter per
-  * group (typically per FILE, `sink/SnapshotSink.commitWithSetIndex`)
+  * group (typically per FILE, `sink/SnapshotSink.SetIndex`)
   * answering "might this group contain hash h?" with no false negatives.
   *
   * Scale shape: a TypedImperativeAggregate participates in map-side

@@ -1,8 +1,13 @@
 package graft.sink
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+
+import scala.jdk.CollectionConverters._
 
 /** MANIFEST-COMMITTED parquet snapshots — atomic dataset publication
   * without a table format. A 100 TB write that dies halfway must leave
@@ -17,14 +22,18 @@ import org.apache.spark.sql.functions._
   * Layout under the snapshot root:
   *   data/<token>/part-*.parquet   — each commit writes a FRESH subdir
   *   _manifests/v<N>.json          — file list + row count; rename-committed
+  *   _manifests/v<N>.stats|setidx  — optional per-file sidecars ([[Sidecars]])
+  *   _published/p<S>.json          — write-audit-publish pointers
   *
-  * Commit protocol: write data files → write `v<N>.json.tmp` → rename to
-  * `v<N>.json` (atomic on HDFS/posix). A crash before the rename leaves
-  * orphan data files and a `.tmp` — both invisible to readers, who only
-  * trust fully-renamed manifests. The latest snapshot IS max(N) over
-  * committed manifests, so there is no second pointer file to race on.
-  * Single concurrent committer assumed (the version counter is
-  * read-allocate-rename); readers need no coordination at any
+  * Commit protocol: write data files → write sidecars → write
+  * `v<N>.json.tmp` → rename to `v<N>.json` (atomic on HDFS/posix). A
+  * crash before the rename leaves orphan data files, sidecars and a
+  * `.tmp` — all invisible to readers, who only trust fully-renamed
+  * manifests. The latest snapshot IS max(N) over committed manifests, so
+  * there is no second pointer file to race on. Every write — commit,
+  * append, compaction, delete, TTL, upsert — goes through the one
+  * [[commitStep]]. Single concurrent committer assumed (the version
+  * counter is read-allocate-rename); readers need no coordination at any
   * concurrency.
   *
   * Scale notes: the manifest holds file PATHS (O(files), KBs–MBs at
@@ -36,10 +45,37 @@ object SnapshotSink {
 
   final case class Snapshot(version: Int, files: Seq[String], rows: Long)
 
+  /** A per-file Bloom set index over `keys` — a LongType or ARRAY<BIGINT>
+    * column computed FROM the written columns, e.g.
+    * `portableHash64(tokens(col("text")))`. `expectedPerFile` sizes each
+    * filter (distinct keys per file; ~1.2 KB per 1k keys at 1%). */
+  final case class SetIndex(keys: Column, expectedPerFile: Long, fpp: Double = 0.01) {
+    require(expectedPerFile > 0, "expectedPerFile must be positive")
+  }
+
+  /** The sidecars a version carries: range zone maps over `stats`, with
+    * per-file decimal `sums` riding in the same sidecar, and/or a
+    * membership [[SetIndex]]. A plain [[commit]] starts a fresh set;
+    * every write that continues a lineage ([[append]], [[compact]] and
+    * the maintenance ops) must name exactly the tip's sidecars, or it is
+    * refused — a sidecar is never silently dropped. */
+  final case class Sidecars(
+      stats: Seq[String] = Seq.empty,
+      sums: Seq[String] = Seq.empty,
+      set: Option[SetIndex] = None) {
+    require(sums.isEmpty || stats.nonEmpty,
+      "sums ride the zone-map sidecar — stats must be non-empty")
+  }
+
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def manifestDir(root: String) = new Path(root, "_manifests")
+  private def publishDir(root: String) = new Path(root, "_published")
+  private def statsDir(root: String, version: Int) =
+    new Path(manifestDir(root), s"v$version.stats")
+  private def setIndexDir(root: String, version: Int) =
+    new Path(manifestDir(root), s"v$version.setidx")
 
   /** Path-canonical string form — sidecar file strings come from
     * `input_file_name()` (`file:///…`) while manifest files come from
@@ -47,21 +83,51 @@ object SnapshotSink {
     * this or victim files silently mismatch (the q154 lesson). */
   private def canon(p: String): String = new Path(p).toString
 
-  /** Total of a sidecar frame's `rows` column (0 for an empty frame). */
-  private def totalRows(sidecar: DataFrame): Long =
-    Option(sidecar.agg(sum("rows")).head.get(0))
-      .map(_.asInstanceOf[Long]).getOrElse(0L)
-
-  /** Committed versions, ascending (fully-renamed manifests only). */
-  def versions(spark: SparkSession, root: String): Seq[Int] = {
-    val dir = manifestDir(root)
+  /** The `N` of every fully-renamed `<prefix><N>.json` under `dir`, ascending. */
+  private def numbered(spark: SparkSession, dir: Path, prefix: String): Seq[Int] = {
     val f = fs(spark, dir)
+    val name = s"$prefix(\\d+)\\.json".r
     if (!f.exists(dir)) Seq.empty
     else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.matches("v\\d+\\.json") =>
-        s.stripPrefix("v").stripSuffix(".json").toInt }
+      .collect { case name(n) => n.toInt }
       .sorted
   }
+
+  /** Write `body` as `dir/name` atomically: a temp file, then one rename. */
+  private def renameCommit(spark: SparkSession, dir: Path, name: String, body: String): Unit = {
+    val f = fs(spark, dir)
+    f.mkdirs(dir)
+    val tmp = new Path(dir, s"$name.tmp")
+    val fin = new Path(dir, name)
+    val out = f.create(tmp, true)
+    try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!f.rename(tmp, fin))
+      throw new IllegalStateException(s"snapshot commit failed: cannot rename $tmp to $fin")
+  }
+
+  /** A small metadata file (manifest or publish pointer) as a string. */
+  private def readSmall(spark: SparkSession, p: Path): String = {
+    val in = fs(spark, p).open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+      java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** A machine-written integer field of a metadata file. */
+  private def longField(json: String, name: String): Long =
+    ("\"" + name + "\":(\\d+)").r.findFirstMatchIn(json).get.group(1).toLong
+
+  /** Run `f` over the parquet footer of `p`, read on the driver. */
+  private def withFooter[A](spark: SparkSession, p: Path)(f: ParquetFileReader => A): A = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()))
+    try f(r) finally r.close()
+  }
+
+  /** Committed versions, ascending (fully-renamed manifests only). */
+  def versions(spark: SparkSession, root: String): Seq[Int] =
+    numbered(spark, manifestDir(root), "v")
 
   /** Write `df`'s data files into a fresh data subdir — NO manifest yet,
     * so nothing is visible to readers. Returns the file list. */
@@ -75,62 +141,279 @@ object SnapshotSink {
       .filter(_.getName.endsWith(".parquet")).map(_.toString).sorted
   }
 
-  /** Write `df`'s data files into a fresh data subdir — NO manifest yet,
-    * so nothing is visible to readers. Returns (files, rows). */
-  private def writeData(df: DataFrame, root: String): (Seq[String], Long) = {
-    val spark = df.sparkSession
-    val files = writeFiles(df, root)
-    // Exact row count from parquet footer METADATA. For small commits the
-    // footers are read on the driver (r16 optimization: the previous
-    // `spark.read.parquet(files).count()` was already footer-only but
-    // still planned and scheduled one Spark job per commit — pure
-    // scheduler latency for state-sized snapshots, ~40 commit sites across
-    // the query surface). A commit with many files keeps the DISTRIBUTED
-    // footer count: driver-serial footer I/O is O(files) and the driver
-    // should not do data-proportional work (guide §5).
-    val rows =
-      if (files.isEmpty) 0L
-      else if (files.size <= 64) {
-        val conf = spark.sessionState.newHadoopConf()
-        files.map { p =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new Path(p), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
-      } else spark.read.parquet(files: _*).count()
-    (files, rows)
+  // ===== Per-file facts: the row count and every sidecar row =====
+  //
+  // Zone maps are the data-skipping half of the ClickHouse sort-key story
+  // the reference leans on (`reference/seghouse/warehouse/clickhouse.py:86-87`
+  // — `PARTITION BY toDate(timestamp) ORDER BY (timestamp, message_id)`
+  // exists precisely so the server can skip granules by primary-key
+  // range): a version carrying `Sidecars(stats = …)` has a QUERYABLE
+  // parquet sidecar of per-file bounds, and [[readPruned]] drops every
+  // file whose [min,max] cannot intersect the predicate BEFORE Spark ever
+  // lists it. Layout clustering is the caller's lever — `repartitionByRange`
+  // on the stats column gives tight disjoint per-file ranges (the ZOrder
+  // module's multi-column variant composes the same way), after which an
+  // equality/range probe touches O(1) files out of O(table).
+  //
+  // The set index skips on MEMBERSHIP and needs no clustering —
+  // ClickHouse's `tokenbf_v1` secondary index, here at file grain: each
+  // data file carries one Bloom filter over a caller-defined per-row hash
+  // SET (token hashes for full-text probes, user-id hashes for point
+  // lookups), and a probe reads only files whose filter might contain the
+  // hash. No false negatives ⇒ pruning is lossless for any predicate that
+  // IMPLIES "some row's key set contains h"; false positives only add
+  // files.
+  //
+  // Scale notes: a commit's facts come from ONE source — the footers when
+  // they are exact, else one column-pruned, map-side-combined groupBy(file)
+  // pass over the just-written batch that yields rows, bounds, sums and
+  // the Bloom filter together (O(batch), each partition ships one partial
+  // per file). Sidecars are O(files × columns) parquet — at a million
+  // files a well-formed small table, which is why they are stored as
+  // parquet and not folded into the JSON manifest. They are written
+  // BEFORE the manifest rename, so commit atomicity is unchanged: an
+  // unreferenced sidecar from a crashed commit is invisible (readers
+  // resolve sidecars through the committed version number) and is swept
+  // by vacuum after the orphan grace.
+
+  /** Fixed-point type for per-file measure sums: exact, mergeable
+    * across files (decimal addition is associative — the property the
+    * metadata-only aggregate path rests on), and wide enough that
+    * file-level partials never overflow. */
+  private val SumDec = "decimal(30,6)"
+
+  /** A batch's facts: its row count and the fresh rows of each sidecar
+    * the commit names (one row per non-empty file). */
+  private final case class Facts(rows: Long, stats: Option[DataFrame], set: Option[DataFrame])
+
+  /** The zone-map sidecar rows of `files` from their parquet FOOTERS, and
+    * the total row count; with no `statsCols` just the per-file row
+    * counts. Footer column statistics are exact for a plain non-repeated
+    * INT32/INT64 column, so this is taken only when EVERY stats column is
+    * one, every row group carries statistics, and there are ≤ 64 files
+    * (bounded driver I/O; a larger commit keeps its Spark pass, since the
+    * driver should not do data-proportional work). String and
+    * binary footer stats may be truncated and are refused. Anything else
+    * returns None and the caller runs the distributed pass, so the
+    * sidecar CONTENT is identical either way, by parquet's metadata
+    * contract. Zero-row files get no sidecar row, exactly like the Spark
+    * path's groupBy over an empty scan. */
+  private def footerStats(
+      spark: SparkSession, files: Seq[String],
+      statsCols: Seq[String]): Option[(Long, DataFrame)] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    if (files.isEmpty || files.size > 64) return None
+    val colTypes = scala.collection.mutable.LinkedHashMap.empty[String, PrimitiveTypeName]
+    val rowsOut = scala.collection.mutable.ArrayBuffer.empty[Row]
+    var total = 0L
+    for (p <- files) withFooter(spark, new Path(p)) { r =>
+      val schema = r.getFooter.getFileMetaData.getSchema
+      for (c <- statsCols) {
+        val f = schema.getFields.toArray.collectFirst {
+          case t: org.apache.parquet.schema.Type if t.getName == c => t }
+        val prim = f match {
+          case Some(t) if t.isPrimitive && !t.isRepetition(
+              org.apache.parquet.schema.Type.Repetition.REPEATED) &&
+              t.getLogicalTypeAnnotation == null &&
+              (t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 ||
+                t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT32) =>
+            t.asPrimitiveType.getPrimitiveTypeName
+          case _ => return None // not an exact-footer-stats column type
+        }
+        if (colTypes.getOrElseUpdate(c, prim) != prim) return None
+      }
+      val blocks = r.getFooter.getBlocks
+      val fileRows = r.getRecordCount
+      total += fileRows
+      if (fileRows > 0L) {
+        val vals = statsCols.flatMap { c =>
+          var mn: Comparable[Any] = null
+          var mx: Comparable[Any] = null
+          var nulls = 0L
+          val it = blocks.iterator()
+          while (it.hasNext) {
+            val b = it.next()
+            val cc = b.getColumns.toArray.collectFirst {
+              case m: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+                if m.getPath == org.apache.parquet.hadoop.metadata.ColumnPath.get(c) => m }
+              .getOrElse(return None)
+            val st = cc.getStatistics
+            if (st == null || !st.isNumNullsSet) return None // stats absent — fall back
+            nulls += st.getNumNulls
+            if (st.hasNonNullValue) {
+              val bmn = st.genericGetMin.asInstanceOf[Comparable[Any]]
+              val bmx = st.genericGetMax.asInstanceOf[Comparable[Any]]
+              if (mn == null || bmn.compareTo(mn) < 0) mn = bmn
+              if (mx == null || bmx.compareTo(mx) > 0) mx = bmx
+            }
+          }
+          Seq(mn, mx, java.lang.Long.valueOf(nulls))
+        }
+        rowsOut += Row.fromSeq(Seq(p, java.lang.Long.valueOf(fileRows)) ++ vals)
+      }
+    }
+    val valueType: PrimitiveTypeName => DataType = {
+      case PrimitiveTypeName.INT64 => LongType
+      case _                       => IntegerType
+    }
+    val schema = StructType(
+      Seq(StructField("file", StringType), StructField("rows", LongType)) ++
+        statsCols.flatMap { c =>
+          val t = valueType(colTypes(c))
+          Seq(StructField(s"${c}__min", t), StructField(s"${c}__max", t),
+            StructField(s"${c}__nulls", LongType))
+        })
+    Some((total, spark.createDataFrame(rowsOut.asJava, schema)))
   }
 
-  /** Rename-commit a manifest for `version` over `files`. */
-  private def writeManifest(
-      spark: SparkSession, root: String, version: Int,
-      files: Seq[String], rows: Long): Snapshot = {
-    val mdir = manifestDir(root)
-    val f = fs(spark, mdir)
-    f.mkdirs(mdir)
-    val tmp = new Path(mdir, s"v$version.json.tmp")
-    val fin = new Path(mdir, s"v$version.json")
-    val json = {
-      def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-      s"""{"version":$version,"rows":$rows,"files":[${files.map(q).mkString(",")}]}"""
+  /** The facts of freshly written `files` for the sidecars `idx` names,
+    * each computed once: zone maps from the footers when [[footerStats]]
+    * is exact; everything else — rows, the remaining min/max/nulls, sums
+    * and the Bloom filter — from ONE groupBy(file) pass. A plain commit
+    * runs no pass at all (footer row counts, or a metadata-only count
+    * past 64 files). */
+  private def freshFacts(spark: SparkSession, files: Seq[String], idx: Sidecars): Facts = {
+    if (files.isEmpty) return Facts(0L, None, None)
+    val footer =
+      if (idx.sums.nonEmpty || (idx.stats.isEmpty && idx.set.nonEmpty)) None
+      else footerStats(spark, files, idx.stats)
+    val footerSide = footer.filter(_ => idx.stats.nonEmpty).map(_._2)
+    if (idx.set.isEmpty && (footer.nonEmpty || idx.stats.isEmpty))
+      return Facts(footer.fold(readWritten(spark, files).count())(_._1), footerSide, None)
+    val owed = if (footer.nonEmpty) Seq.empty else idx.stats
+    val aggs = count(lit(1L)).as("rows") +: (owed.flatMap(c => Seq(
+      min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
+      sum(col(c).isNull.cast("long")).as(s"${c}__nulls"))) ++
+      idx.sums.map(m =>
+        sum(col(m).cast("decimal(18,6)")).cast(SumDec).as(s"${m}__sum")) ++
+      idx.set.map(s => graft.plans.BloomSetAgg.bloomSetAgg(
+        col("ks"), s.expectedPerFile, s.fpp).as("bloom")))
+    val perFile = readWritten(spark, files)
+      .select(input_file_name().as("file") +: ((owed ++ idx.sums).distinct.map(col) ++
+        idx.set.map(_.keys.as("ks"))): _*)
+      .groupBy("file").agg(aggs.head, aggs.tail: _*)
+      .coalesce(1)
+    val rows = perFile.collect()
+    val local = spark.createDataFrame(rows.toSeq.asJava, perFile.schema)
+    Facts(rows.map(_.getLong(1)).sum,
+      footerSide.orElse(if (idx.stats.isEmpty) None else Some(local.drop("bloom"))),
+      idx.set.map(_ => local.select("file", "rows", "bloom")))
+  }
+
+  /** The Spark schema a parquet file was written with, from its footer on
+    * the driver: a read given this schema plans with no inference job. */
+  private def writtenSchema(spark: SparkSession, p: Path): StructType =
+    withFooter(spark, p)(r => DataType.fromJson(r.getFooter.getFileMetaData
+      .getKeyValueMetaData.get("org.apache.spark.sql.parquet.row.metadata"))
+      .asInstanceOf[StructType])
+
+  /** Files of one just-finished write, read with their written schema. */
+  private def readWritten(spark: SparkSession, files: Seq[String]): DataFrame =
+    spark.read.schema(writtenSchema(spark, new Path(files.head))).parquet(files: _*)
+
+  /** The Spark schema of the parquet sidecar at `dir` (None when absent). */
+  private def sidecarSchema(spark: SparkSession, dir: Path): Option[StructType] = {
+    val f = fs(spark, dir)
+    if (!f.exists(dir)) None
+    else f.listStatus(dir).toSeq.map(_.getPath)
+      .find(_.getName.endsWith(".parquet")).map(writtenSchema(spark, _))
+  }
+
+  /** The parquet sidecar at `dir`; `missing` is the refusal when absent. */
+  private def readSidecar(spark: SparkSession, dir: Path, missing: => String): DataFrame = {
+    val schema = sidecarSchema(spark, dir)
+    require(schema.nonEmpty, missing)
+    spark.read.schema(schema.get).parquet(dir.toString)
+  }
+
+  /** Refuse a write that continues version `v` unless `idx` names exactly
+    * the sidecars `v` carries — dropping one would leave the next pruned
+    * read, TTL or upsert on the new tip without the index it needs. */
+  private def requireSidecars(spark: SparkSession, root: String, v: Int, idx: Sidecars): Unit = {
+    sidecarSchema(spark, statsDir(root, v)).map(_.fieldNames.toSet) match {
+      case None => require(idx.stats.isEmpty,
+        s"snapshot v$v has no zone-map sidecar to extend (committed without stats)")
+      case Some(have) =>
+        require(idx.stats.nonEmpty,
+          s"snapshot v$v carries a zone-map sidecar — name its stats (and sums) " +
+            "in Sidecars so this write keeps it")
+        val want = Set("file", "rows") ++ idx.stats.flatMap(c =>
+          Seq(s"${c}__min", s"${c}__max", s"${c}__nulls")) ++ idx.sums.map(m => s"${m}__sum")
+        require(have == want,
+          s"stats sidecar schema mismatch: v$v has [${have.toSeq.sorted.mkString(",")}], " +
+            s"this write names [${want.toSeq.sorted.mkString(",")}] — name the " +
+            "lineage's original stats and sums")
     }
-    val out = f.create(tmp, true)
-    try out.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!f.rename(tmp, fin))
-      throw new IllegalStateException(s"snapshot commit failed: cannot rename $tmp to $fin")
+    if (fs(spark, setIndexDir(root, v)).exists(setIndexDir(root, v)))
+      require(idx.set.nonEmpty,
+        s"snapshot v$v carries a set index — name it in Sidecars(set = …) so " +
+          "this write keeps it")
+    else require(idx.set.isEmpty,
+      s"snapshot v$v has no set index to extend (committed without one)")
+  }
+
+  /** The latest snapshot, as the tip a lineage-continuing write extends. */
+  private def tip(spark: SparkSession, root: String, idx: Sidecars): Snapshot = {
+    val s = snapshot(spark, root)
+    requireSidecars(spark, root, s.version, idx)
+    s
+  }
+
+  /** THE commit step of every write. The new version references `carried`
+    * (files of `prior`, kept verbatim) plus the freshly written `fresh`;
+    * each sidecar `idx` names is the prior version's rows for the carried
+    * files — per-file facts, since files never change once committed —
+    * plus the fresh files' rows from [[freshFacts]]. So an append or a
+    * targeted rewrite costs O(new files) fact work + O(files) sidecar
+    * metadata, never a table re-scan. `prior` is None for a plain commit
+    * (a fresh sidecar set, version = latest + 1); otherwise the caller
+    * has checked it with [[requireSidecars]]. Sidecars land before the
+    * manifest's rename, which publishes the version. */
+  private def commitStep(
+      spark: SparkSession, root: String, prior: Option[Snapshot],
+      carried: Seq[String], fresh: Seq[String], idx: Sidecars): Snapshot = {
+    val version = prior.fold(versions(spark, root).lastOption.getOrElse(0))(_.version) + 1
+    val facts = freshFacts(spark, fresh, idx)
+    val wholeTip = prior.exists(_.files.size == carried.size)
+    // one sidecar of the new version; returns the carried files' row total
+    def extend(dir: Int => Path, freshSide: Option[DataFrame]): Long = {
+      val (kept, keptRows) = prior match {
+        case Some(p) if carried.nonEmpty || freshSide.isEmpty =>
+          val all = readSidecar(spark, dir(p.version), s"snapshot v${p.version} lost a sidecar")
+          if (wholeTip) (Some(all), p.rows)
+          else {
+            val keep = carried.map(canon).toSet
+            val hit = all.select("file", "rows").collect()
+              .filter(r => keep.contains(canon(r.getString(0))))
+            (Some(all.filter(col("file").isin(hit.map(_.getString(0)).toSeq: _*))),
+              hit.map(_.getLong(1)).sum)
+          }
+        case _ => (None, 0L)
+      }
+      (kept ++ freshSide).reduceOption(_.unionByName(_)).foreach(
+        _.coalesce(1).write.mode("overwrite").parquet(dir(version).toString))
+      keptRows
+    }
+    val statsRows =
+      if (idx.stats.isEmpty) None else Some(extend(statsDir(root, _), facts.stats))
+    val setRows = idx.set.map(_ => extend(setIndexDir(root, _), facts.set))
+    require(carried.isEmpty || wholeTip || idx.stats.nonEmpty || idx.set.nonEmpty,
+      "a partial carry needs a sidecar to count the carried rows")
+    val rows = facts.rows + statsRows.orElse(setRows)
+      .getOrElse(prior.filter(_ => wholeTip).fold(0L)(_.rows))
+    val files = (carried ++ fresh).sorted
+    def q(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+    renameCommit(spark, manifestDir(root), s"v$version.json",
+      s"""{"version":$version,"rows":$rows,"files":[${files.map(q).mkString(",")}]}""")
     Snapshot(version, files, rows)
   }
 
-  /** Write `df` as the next snapshot version and commit it atomically.
-    * Returns the committed snapshot descriptor. */
-  def commit(df: DataFrame, root: String): Snapshot = {
-    val spark = df.sparkSession
-    val (files, rows) = writeData(df, root)
-    val version = versions(spark, root).lastOption.getOrElse(0) + 1
-    writeManifest(spark, root, version, files, rows)
-  }
+  /** Write `df` as the next snapshot version and commit it atomically,
+    * with the sidecars `idx` names computed over the new files (a fresh
+    * sidecar set: nothing is carried). Returns the committed snapshot
+    * descriptor. */
+  def commit(df: DataFrame, root: String, idx: Sidecars = Sidecars()): Snapshot =
+    commitStep(df.sparkSession, root, None, Seq.empty, writeFiles(df, root), idx)
 
   /** APPEND `df` as the next snapshot version WITHOUT rewriting existing
     * data: the batch lands in a fresh data subdir and the new manifest
@@ -138,36 +421,25 @@ object SnapshotSink {
     * add-files commit, O(batch) write I/O per append instead of the
     * O(table) rewrite a read-union-recommit costs. This is how a
     * corpus-sized table (e.g. an ANN signature index, q143) grows
-    * incrementally; state-sized tables can afford either. Readers of
-    * prior versions are untouched (their file lists never change). */
-  def append(df: DataFrame, root: String): Snapshot = {
+    * incrementally; state-sized tables can afford either. `idx` must name
+    * exactly the tip's sidecars, which are extended by the batch's rows.
+    * Readers of prior versions are untouched (their file lists never
+    * change). On an empty root this is a first [[commit]]. */
+  def append(df: DataFrame, root: String, idx: Sidecars = Sidecars()): Snapshot = {
     val spark = df.sparkSession
-    val prior = versions(spark, root).lastOption
-      .map(v => snapshot(spark, root, Some(v)))
-    // batch data lands invisibly first; the ONE manifest rename then
-    // publishes prior files + batch files together — same atomicity as
-    // commit, O(batch) write I/O
-    val (files, rows) = writeData(df, root)
-    val all = (prior.map(_.files).getOrElse(Seq.empty) ++ files).sorted
-    val total = prior.map(_.rows).getOrElse(0L) + rows
-    val version = prior.map(_.version).getOrElse(0) + 1
-    writeManifest(spark, root, version, all, total)
+    val prior =
+      if (versions(spark, root).isEmpty) None else Some(tip(spark, root, idx))
+    commitStep(spark, root, prior, prior.fold(Seq.empty[String])(_.files),
+      writeFiles(df, root), idx)
   }
 
   /** Read `v`'s manifest directly — the caller vouches `v` is committed
     * (no directory re-listing; [[history]] reads V manifests off ONE
     * listing instead of V+1). */
   private def readManifest(spark: SparkSession, root: String, v: Int): Snapshot = {
-    val p = new Path(manifestDir(root), s"v$v.json")
-    val f = fs(spark, p)
-    val in = f.open(p)
-    val json =
-      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8)
-      finally in.close()
-    // manifest fields are machine-written (see commit) — parse positionally
-    val rows = """"rows":(\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
-    Snapshot(v, parseFilesArray(json), rows)
+    val json = readSmall(spark, new Path(manifestDir(root), s"v$v.json"))
+    // manifest fields are machine-written (see commitStep) — parse positionally
+    Snapshot(v, parseFilesArray(json), longField(json, "rows"))
   }
 
   /** The committed snapshot descriptor for `version` (default: latest). */
@@ -229,18 +501,6 @@ object SnapshotSink {
       .toDF("version", "n_files", "n_rows")
   }
 
-  private def publishDir(root: String) = new Path(root, "_published")
-
-  private def publishSeqs(spark: SparkSession, root: String): Seq[Int] = {
-    val dir = publishDir(root)
-    val f = fs(spark, dir)
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
-      .collect { case s if s.matches("p\\d+\\.json") =>
-        s.stripPrefix("p").stripSuffix(".json").toInt }
-      .sorted
-  }
-
   /** WRITE–AUDIT–PUBLISH promotion: mark a COMMITTED version as the one
     * published readers see. Commits are the WRITE, the caller's checks
     * between commit and this call are the AUDIT, and this pointer is
@@ -249,37 +509,21 @@ object SnapshotSink {
     * this store). The pointer advances by the manifest rename
     * discipline (write temp, atomic rename), and pointer files are
     * SEQUENCED, never overwritten, so the publish history — including
-    * rollbacks to an older version — is itself auditable. */
+    * rollbacks to an older version — is itself auditable. [[vacuum]]
+    * never retires the published version. */
   def publish(spark: SparkSession, root: String, version: Int): Unit = {
     require(versions(spark, root).contains(version),
       s"cannot publish uncommitted version $version")
-    val pdir = publishDir(root)
-    val f = fs(spark, pdir)
-    f.mkdirs(pdir)
-    val seq = publishSeqs(spark, root).lastOption.getOrElse(0) + 1
-    val tmp = new Path(pdir, s"p$seq.json.tmp")
-    val fin = new Path(pdir, s"p$seq.json")
-    val out = f.create(tmp, true)
-    try out.write(s"""{"seq":$seq,"version":$version}"""
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!f.rename(tmp, fin))
-      throw new IllegalStateException(s"publish failed: cannot rename $tmp to $fin")
+    val seq = numbered(spark, publishDir(root), "p").lastOption.getOrElse(0) + 1
+    renameCommit(spark, publishDir(root), s"p$seq.json", s"""{"seq":$seq,"version":$version}""")
   }
 
   /** The currently published version (highest-sequence pointer), or
     * None when nothing has been published yet. */
-  def publishedVersion(spark: SparkSession, root: String): Option[Int] = {
-    publishSeqs(spark, root).lastOption.map { seq =>
-      val p = new Path(publishDir(root), s"p$seq.json")
-      val in = fs(spark, p).open(p)
-      val json =
-        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      """"version":(\d+)""".r.findFirstMatchIn(json).get.group(1).toInt
+  def publishedVersion(spark: SparkSession, root: String): Option[Int] =
+    numbered(spark, publishDir(root), "p").lastOption.map { seq =>
+      longField(readSmall(spark, new Path(publishDir(root), s"p$seq.json")), "version").toInt
     }
-  }
 
   /** Read through the published pointer — what a downstream consumer
     * sees; staged (committed-but-unpublished) versions are invisible. */
@@ -300,7 +544,6 @@ object SnapshotSink {
     * between them). */
   def cdc(spark: SparkSession, root: String, fromV: Int, toV: Int,
           keyCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions._
     val from = read(spark, root, Some(fromV))
     val to = read(spark, root, Some(toV))
     require(from.columns.sorted.sameElements(to.columns.sorted),
@@ -331,476 +574,107 @@ object SnapshotSink {
     spark.read.parquet(s.files: _*)
   }
 
-  // ===== Zone maps: per-file min/max stats sidecar + pruned reads =====
-  //
-  // The data-skipping half of the ClickHouse sort-key story the reference
-  // leans on (`reference/seghouse/warehouse/clickhouse.py:86-87` —
-  // `PARTITION BY toDate(timestamp) ORDER BY (timestamp, message_id)`
-  // exists precisely so the server can skip granules by primary-key
-  // range): a snapshot committed through [[commitWithStats]] carries a
-  // QUERYABLE parquet sidecar of per-file bounds, and [[readPruned]]
-  // drops every file whose [min,max] cannot intersect the predicate
-  // BEFORE Spark ever lists it. Layout clustering is the caller's lever —
-  // `repartitionByRange` on the stats column gives tight disjoint
-  // per-file ranges (the ZOrder module's multi-column variant composes
-  // the same way), after which an equality/range probe touches O(1)
-  // files out of O(table).
-  //
-  // Scale notes: the stats job replaces the plain-commit count pass (one
-  // column-pruned, map-side-combined aggregate over the just-written
-  // batch — O(batch) like the count it replaces, and it yields the row
-  // count for free); the sidecar is O(files × statsCols) parquet — at a
-  // million files it is itself a well-formed small table, which is why
-  // it is stored as parquet and not folded into the JSON manifest. The
-  // sidecar is written BEFORE the manifest rename, so commit atomicity
-  // is unchanged: an unreferenced `.stats` dir from a crashed commit is
-  // invisible (readers resolve stats through the committed version
-  // number) and is swept by vacuum after the orphan grace.
-
-  private def statsDir(root: String, version: Int) =
-    new Path(manifestDir(root), s"v$version.stats")
-
-  /** One row per data file: `file`, `rows`, and for each stats column
+  /** The zone-map sidecar of `version` (default latest) as a DataFrame —
+    * one row per data file: `file`, `rows`, and for each stats column
     * `<c>__min` / `<c>__max` / `<c>__nulls` in the column's NATIVE type
     * (parquet preserves it, so pruning comparisons never round-trip
-    * through strings). Exact bounds — computed from the committed rows
-    * themselves; a petabyte deployment could swap in a footer-metadata
-    * job without changing the sidecar contract. */
-  /** Fixed-point type for per-file measure sums: exact, mergeable
-    * across files (decimal addition is associative — the property the
-    * metadata-only aggregate path rests on), and wide enough that
-    * file-level partials never overflow. */
-  private val SumDec = "decimal(30,6)"
+    * through strings), plus `<m>__sum` per sums column. Stats are
+    * themselves a queryable table. Fails with a pointed message for
+    * versions committed without stats. */
+  def statsTable(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame =
+    statsOf(spark, root, snapshot(spark, root, version).version)
 
-  private def computeFileStats(
-      spark: SparkSession, files: Seq[String], statsCols: Seq[String],
-      sumCols: Seq[String] = Seq.empty): DataFrame = {
-    val base = spark.read.parquet(files: _*)
-      .select(input_file_name().as("file") +:
-        (statsCols ++ sumCols).distinct.map(col): _*)
-    val aggs = count(lit(1L)).as("rows") +: (statsCols.flatMap(c => Seq(
-      min(col(c)).as(s"${c}__min"), max(col(c)).as(s"${c}__max"),
-      sum(col(c).isNull.cast("long")).as(s"${c}__nulls"))) ++
-      sumCols.map(m =>
-        sum(col(m).cast("decimal(18,6)")).cast(SumDec).as(s"${m}__sum")))
-    base.groupBy("file").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Driver-side zone-map sidecar from parquet FOOTER column statistics —
-    * the stats twin of the r16 footer row count (guide §6: the commit's
-    * stats job was one more scheduled Spark pass RE-READING the batch it
-    * just wrote; for state-sized commits the footers already hold exact
-    * per-column min/max/null_count). Taken only when it is provably
-    * EXACT and driver-cheap: ≤ 64 files (bounded driver I/O, same bound
-    * as the footer row count), no sum columns (footers carry no sums),
-    * every stats column stored as a plain non-repeated INT32/INT64
-    * (parquet integer statistics are exact; string/binary footer stats
-    * may be truncated and are refused), and every row group actually
-    * carrying statistics. Anything else returns None and the caller
-    * falls back to the distributed stats pass — so the sidecar CONTENT
-    * is identical either way, by parquet's metadata contract.
-    * Zero-row files get no sidecar row, exactly like the Spark path's
-    * groupBy over an empty scan. Returns (sidecar frame, total rows). */
-  private def footerFileStats(
-      spark: SparkSession, files: Seq[String],
-      statsCols: Seq[String]): Option[(DataFrame, Long)] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-    if (files.isEmpty || files.size > 64) return None
-    val conf = spark.sessionState.newHadoopConf()
-    val colTypes = scala.collection.mutable.LinkedHashMap.empty[String, PrimitiveTypeName]
-    val rowsOut = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    var total = 0L
-    for (p <- files) {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(p), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        val schema = r.getFooter.getFileMetaData.getSchema
-        for (c <- statsCols) {
-          val f = schema.getFields.toArray.collectFirst {
-            case t: org.apache.parquet.schema.Type if t.getName == c => t }
-          val prim = f match {
-            case Some(t) if t.isPrimitive && !t.isRepetition(
-                org.apache.parquet.schema.Type.Repetition.REPEATED) &&
-                t.getLogicalTypeAnnotation == null &&
-                (t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT64 ||
-                  t.asPrimitiveType.getPrimitiveTypeName == PrimitiveTypeName.INT32) =>
-              t.asPrimitiveType.getPrimitiveTypeName
-            case _ => return None // not an exact-footer-stats column type
-          }
-          if (colTypes.getOrElseUpdate(c, prim) != prim) return None
-        }
-        val blocks = r.getFooter.getBlocks
-        val fileRows = r.getRecordCount
-        total += fileRows
-        if (fileRows > 0L) {
-          val vals = statsCols.flatMap { c =>
-            var mn: Comparable[Any] = null
-            var mx: Comparable[Any] = null
-            var nulls = 0L
-            val it = blocks.iterator()
-            while (it.hasNext) {
-              val b = it.next()
-              val cc = b.getColumns.toArray.collectFirst {
-                case m: org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
-                  if m.getPath == org.apache.parquet.hadoop.metadata.ColumnPath.get(c) => m }
-                .getOrElse(return None)
-              val st = cc.getStatistics
-              if (st == null || !st.isNumNullsSet) return None // stats absent — fall back
-              nulls += st.getNumNulls
-              if (st.hasNonNullValue) {
-                val bmn = st.genericGetMin.asInstanceOf[Comparable[Any]]
-                val bmx = st.genericGetMax.asInstanceOf[Comparable[Any]]
-                if (mn == null || bmn.compareTo(mn) < 0) mn = bmn
-                if (mx == null || bmx.compareTo(mx) > 0) mx = bmx
-              }
-            }
-            Seq(mn, mx, java.lang.Long.valueOf(nulls))
-          }
-          rowsOut += org.apache.spark.sql.Row.fromSeq(
-            Seq(p, java.lang.Long.valueOf(fileRows)) ++ vals)
-        }
-      } finally r.close()
-    }
-    import org.apache.spark.sql.types._
-    val valueType: PrimitiveTypeName => DataType = {
-      case PrimitiveTypeName.INT64 => LongType
-      case _                       => IntegerType
-    }
-    val schema = StructType(
-      Seq(StructField("file", StringType), StructField("rows", LongType)) ++
-        statsCols.flatMap { c =>
-          val t = valueType(colTypes(c))
-          Seq(StructField(s"${c}__min", t), StructField(s"${c}__max", t),
-            StructField(s"${c}__nulls", LongType))
-        })
-    import scala.jdk.CollectionConverters._
-    Some((spark.createDataFrame(rowsOut.toSeq.asJava, schema), total))
-  }
-
-  /** The stats sidecar for freshly written `files`: footer-exact driver
-    * path when eligible, the distributed pass otherwise. The second
-    * element is the total row count when the footer path supplied it. */
-  private def fileStats(
-      spark: SparkSession, files: Seq[String], statsCols: Seq[String],
-      sumCols: Seq[String]): (DataFrame, Option[Long]) =
-    (if (sumCols.isEmpty) footerFileStats(spark, files, statsCols) else None) match {
-      case Some((df, total)) => (df, Some(total))
-      case None => (computeFileStats(spark, files, statsCols, sumCols), None)
-    }
-
-  /** [[commit]], plus a zone-map sidecar over `statsCols`. The row count
-    * comes from the same single stats pass (no separate count job). */
-  def commitWithStats(df: DataFrame, root: String, statsCols: Seq[String]): Snapshot = {
-    require(statsCols.nonEmpty, "commitWithStats needs at least one stats column")
-    commitIndexed(df, root, statsCols, None)
-  }
-
-  /** [[append]], plus a zone-map sidecar: the new version's sidecar is
-    * the prior sidecar's rows (stats are per-file facts — files never
-    * change once committed) plus the batch's freshly computed rows, so an
-    * append costs O(batch) stats work + O(files) sidecar metadata, never
-    * a table re-scan. The prior version must itself carry stats over the
-    * same columns. */
-  def appendWithStats(df: DataFrame, root: String, statsCols: Seq[String]): Snapshot = {
-    require(statsCols.nonEmpty, "appendWithStats needs at least one stats column")
-    appendIndexed(df, root, statsCols, None)
-  }
-
-  /** The zone-map sidecar of `version` (default latest) as a DataFrame —
-    * stats are themselves a queryable table. Fails with a pointed message
-    * for versions committed without stats. */
-  def statsTable(spark: SparkSession, root: String, version: Option[Int] = None): DataFrame = {
-    val s = snapshot(spark, root, version)
-    val p = statsDir(root, s.version)
-    require(fs(spark, p).exists(p),
-      s"snapshot v${s.version} has no zone-map sidecar (committed without " +
-        "stats — use commitWithStats/appendWithStats)")
-    spark.read.parquet(p.toString)
-  }
+  private def statsOf(spark: SparkSession, root: String, v: Int): DataFrame =
+    readSidecar(spark, statsDir(root, v),
+      s"snapshot v$v has no zone-map sidecar (committed without stats — " +
+        "name them in Sidecars(stats = …))")
 
   final case class PrunedRead(
       df: DataFrame, keptFiles: Int, totalFiles: Int,
       files: Seq[String] = Seq.empty)
 
-  /** Read `version` (default latest) with files pruned by the zone map:
-    * keep only files whose [min,max] on `c` can intersect [lo, hi], then
-    * apply the residual `lo <= c <= hi` filter (pruning is file-granular;
-    * the predicate still runs — and pushes down to row groups — inside
-    * kept files). All-null files are pruned: a range predicate is
-    * null-rejecting. The kept/total counts are returned for audit.
-    *
-    * The kept-file list is collected on the driver — O(files) metadata,
-    * the same order every manifest read already costs; a deployment with
-    * millions of files would push this selection into a join against the
-    * sidecar table instead. */
-  /** The zone-map kept-file list for `lo ≤ c ≤ hi` on `version` —
-    * shared by the single, set-composite and multi-range reads so the
-    * composite paths intersect LISTS instead of constructing and
-    * discarding DataFrames. */
-  private def keptByRange(
-      spark: SparkSession, root: String, version: Int,
-      c: String, lo: Any, hi: Any): Seq[String] = {
-    val mn = col(s"${c}__min")
-    val mx = col(s"${c}__max")
-    statsTable(spark, root, Some(version))
-      .filter(mn.isNotNull && mx.isNotNull && !(mn > lit(hi) || mx < lit(lo)))
-      .select("file").collect().map(_.getString(0)).toSeq.sorted
-  }
-
-  def readPruned(
-      spark: SparkSession, root: String, c: String, lo: Any, hi: Any,
-      version: Option[Int] = None): PrunedRead = {
-    val s = snapshot(spark, root, version)
-    require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
-    val kept = keptByRange(spark, root, s.version, c, lo, hi)
-    val df =
-      if (kept.isEmpty)
-        spark.read.parquet(s.files: _*).filter(lit(false))
-      else
-        spark.read.parquet(kept: _*).filter(col(c) >= lit(lo) && col(c) <= lit(hi))
-    PrunedRead(df, kept.size, s.files.size, kept)
-  }
-
-  // ===== Set skipping index: per-file Bloom sidecar + pruned reads =====
-  //
-  // Zone maps skip on RANGE (and need a clustered layout); the set index
-  // skips on MEMBERSHIP and needs none — ClickHouse's `tokenbf_v1`
-  // secondary index, here at file grain: each data file carries one
-  // Bloom filter over a caller-defined per-row hash SET (token hashes
-  // for full-text probes, user-id hashes for point lookups), and a probe
-  // reads only files whose filter might contain the hash. No false
-  // negatives ⇒ pruning is lossless for any predicate that IMPLIES
-  // "some row's key set contains h"; false positives only add files.
-  // Built by one map-side-combined BloomSetAgg pass (each partition
-  // ships one filter per file to the shuffle — state-sized, like the
-  // zone-map stats job it runs beside).
-
-  private def setIndexDir(root: String, version: Int) =
-    new Path(manifestDir(root), s"v$version.setidx")
-
-  /** One set-index row per file of `files`: `(file, rows, bloom)`. */
-  private def computeSetIndex(
-      spark: SparkSession, files: Seq[String],
-      keys: org.apache.spark.sql.Column, expectedPerFile: Long,
-      fpp: Double): DataFrame = {
-    require(expectedPerFile > 0, "expectedPerFile must be positive")
-    spark.read.parquet(files: _*)
-      .select(input_file_name().as("file"), keys.as("ks"))
-      .groupBy("file")
-      .agg(count(lit(1L)).as("rows"),
-        graft.plans.BloomSetAgg.bloomSetAgg(col("ks"), expectedPerFile, fpp).as("bloom"))
-  }
-
-  /** [[commitWithStats]]'s sibling for membership probes: commit `df`
-    * with a per-file Bloom sidecar over `keys` (a LongType or
-    * ARRAY<BIGINT> column computed FROM the written columns, e.g.
-    * `portableHash64(tokens(col("text")))`). `expectedPerFile` sizes
-    * each filter (distinct keys per file; ~1.2 KB per 1k keys at 1%). */
-  def commitWithSetIndex(
-      df: DataFrame, root: String, keys: org.apache.spark.sql.Column,
-      expectedPerFile: Long, fpp: Double = 0.01): Snapshot =
-    commitIndexed(df, root, Seq.empty, Some((keys, expectedPerFile, fpp)))
-
-  /** Commit with BOTH sidecars — range zone maps over `statsCols` AND a
-    * membership Bloom over `setKeys` — the primary-plus-secondary-index
-    * serve (cluster on time, point-probe on entity): a probe constrained
-    * on both dimensions reads only the INTERSECTION of each index's kept
-    * files ([[readPruned]] ∩ [[readSetPruned]] file sets via
-    * [[readPrunedBoth]]). Both sidecars derive from one column-pruned
-    * pass over the just-written batch. Either index list may be empty /
-    * None — [[commitWithStats]] and [[commitWithSetIndex]] are the
-    * single-index specializations. */
-  def commitIndexed(
-      df: DataFrame, root: String, statsCols: Seq[String],
-      setKeys: Option[(org.apache.spark.sql.Column, Long, Double)],
-      sumCols: Seq[String] = Seq.empty): Snapshot = {
-    require(statsCols.nonEmpty || setKeys.nonEmpty,
-      "commitIndexed needs at least one index (stats columns or set keys)")
-    require(sumCols.isEmpty || statsCols.nonEmpty,
-      "sumCols ride the zone-map sidecar — statsCols must be non-empty")
-    val spark = df.sparkSession
-    val files = writeFiles(df, root)
-    val version = versions(spark, root).lastOption.getOrElse(0) + 1
-    if (files.isEmpty) // zero-part write: an empty version, like commit()
-      return writeManifest(spark, root, version, Seq.empty, 0L)
-    var rows = -1L
-    if (statsCols.nonEmpty) {
-      fileStats(spark, files, statsCols, sumCols) match {
-        case (stats, Some(total)) => // footer-exact: no stats job, no count
-          rows = total
-          stats.coalesce(1).write.mode("overwrite")
-            .parquet(statsDir(root, version).toString)
-        case (fresh, None) =>
-          val stats = fresh.coalesce(1).localCheckpoint(true)
-          rows = totalRows(stats)
-          stats.write.mode("overwrite").parquet(statsDir(root, version).toString)
-      }
-    }
-    setKeys.foreach { case (keys, expectedPerFile, fpp) =>
-      val idx = computeSetIndex(spark, files, keys, expectedPerFile, fpp)
-        .coalesce(1).localCheckpoint(true)
-      if (rows < 0)
-        rows = totalRows(idx)
-      idx.write.mode("overwrite").parquet(setIndexDir(root, version).toString)
-    }
-    writeManifest(spark, root, version, files, rows)
-  }
-
-  /** Conjunctive multi-range pruned read: keep only files whose bounds
-    * can intersect EVERY `(column, lo, hi)` range, then apply the full
-    * residual conjunction. This is the read side of a Z-ORDERED layout
-    * (`operators/ZOrder.zValue`): z-contiguous files span a narrow
-    * range of BOTH interleaved dimensions, so a two-predicate probe
-    * prunes multiplicatively where a single-column sort layout prunes
-    * on its sort key only — the Delta/Iceberg `OPTIMIZE ZORDER BY`
-    * serve, on the same sidecar [[readPruned]] uses. */
-  def readPrunedRanges(
-      spark: SparkSession, root: String, ranges: Seq[(String, Any, Any)],
-      version: Option[Int] = None): PrunedRead = {
-    require(ranges.nonEmpty, "readPrunedRanges needs at least one range")
-    val s = snapshot(spark, root, version)
-    require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
+  /** The zone-map kept-file list of `v`: files whose bounds can intersect
+    * EVERY `(column, lo, hi)` range. All-null files are dropped: a range
+    * predicate is null-rejecting. */
+  private def keptByRanges(
+      spark: SparkSession, root: String, v: Int,
+      ranges: Seq[(String, Any, Any)]): Seq[String] = {
     val keep = ranges.map { case (c, lo, hi) =>
       val mn = col(s"${c}__min")
       val mx = col(s"${c}__max")
       mn.isNotNull && mx.isNotNull && !(mn > lit(hi) || mx < lit(lo))
     }.reduce(_ && _)
-    val kept = statsTable(spark, root, Some(s.version))
+    statsOf(spark, root, v)
       .filter(keep).select("file").collect().map(_.getString(0)).toSeq.sorted
-    val residual = ranges.map { case (c, lo, hi) =>
-      col(c) >= lit(lo) && col(c) <= lit(hi)
-    }.reduce(_ && _)
-    val df =
-      if (kept.isEmpty) spark.read.parquet(s.files: _*).filter(lit(false))
-      else spark.read.parquet(kept: _*).filter(residual)
-    PrunedRead(df, kept.size, s.files.size, kept)
   }
 
-  /** [[appendWithStats]]'s generalization to both sidecars: add-files
-    * append with the zone-map sidecar extended by the batch's rows and
-    * the set-index sidecar extended by the batch's per-file filters
-    * (per-file facts both — files never change once committed, so prior
-    * sidecar rows carry over verbatim; O(batch) index work + O(files)
-    * sidecar metadata per append). Each sidecar is extended only if the
-    * prior version carries it (and the batch must then supply the
-    * matching columns/keys), so a stats-only lineage stays stats-only
-    * under the specialized entry points. */
-  def appendIndexed(
-      df: DataFrame, root: String, statsCols: Seq[String],
-      setKeys: Option[(org.apache.spark.sql.Column, Long, Double)],
-      sumCols: Seq[String] = Seq.empty): Snapshot = {
-    require(statsCols.nonEmpty || setKeys.nonEmpty,
-      "appendIndexed needs at least one index (stats columns or set keys)")
-    require(sumCols.isEmpty || statsCols.nonEmpty,
-      "sumCols ride the zone-map sidecar — statsCols must be non-empty")
-    val spark = df.sparkSession
-    val prior = versions(spark, root).lastOption.map { v =>
-      (snapshot(spark, root, Some(v)), v)
-    }
-    val files = writeFiles(df, root)
-    if (files.isEmpty) // empty batch: nothing to add, no version burned
-      return prior.map(_._1).getOrElse(
-        writeManifest(spark, root, 1, Seq.empty, 0L))
-    val version = prior.map(_._2).getOrElse(0) + 1
-    val all = (prior.map(_._1.files).getOrElse(Seq.empty) ++ files).sorted
-    var rows = -1L
-    if (statsCols.nonEmpty) {
-      val (fresh, freshTotal) = fileStats(spark, files, statsCols, sumCols)
-      val stats = prior.map { p =>
-        val pst = statsTable(spark, root, Some(p._2))
-        // loud schema guard: an append must extend the sidecar with the
-        // SAME statsCols/sumCols the lineage was committed with, or a
-        // sum-carrying lineage silently becomes unappendable
-        require(pst.columns.toSet == fresh.columns.toSet,
-          s"stats sidecar schema mismatch: prior has " +
-            s"[${pst.columns.sorted.mkString(",")}], this append computes " +
-            s"[${fresh.columns.sorted.mkString(",")}] — pass the lineage's " +
-            "original statsCols and sumCols")
-        pst.unionByName(fresh)
-      }.getOrElse(fresh)
-      freshTotal match {
-        case Some(t) => // footer-exact batch stats: the new total is the
-          // prior manifest's count plus the batch (no count job), and the
-          // sidecar union is prior-parquet + a local relation (no
-          // recompute risk worth a checkpoint)
-          rows = prior.map(_._1.rows).getOrElse(0L) + t
-          stats.coalesce(1).write.mode("overwrite")
-            .parquet(statsDir(root, version).toString)
-        case None =>
-          val cp = stats.coalesce(1).localCheckpoint(true)
-          rows = totalRows(cp)
-          cp.write.mode("overwrite").parquet(statsDir(root, version).toString)
-      }
-    }
-    setKeys.foreach { case (keys, expectedPerFile, fpp) =>
-      val fresh = computeSetIndex(spark, files, keys, expectedPerFile, fpp)
-      val idx = prior.map { p =>
-        val pd = setIndexDir(root, p._2)
-        require(fs(spark, pd).exists(pd),
-          s"prior snapshot v${p._2} has no set index to extend " +
-            "(committed without one — use commitWithSetIndex/commitIndexed)")
-        spark.read.parquet(pd.toString).unionByName(fresh)
-      }.getOrElse(fresh).coalesce(1).localCheckpoint(true)
-      if (rows < 0)
-        rows = totalRows(idx)
-      idx.write.mode("overwrite").parquet(setIndexDir(root, version).toString)
-    }
-    writeManifest(spark, root, version, all, rows)
+  /** The set-index kept-file list of `v`: files whose Bloom filter passes
+    * `test`. The per-file probe runs on the driver over the sidecar —
+    * metadata-scale, like the zone-map path. */
+  private def keptBySet(
+      spark: SparkSession, root: String, v: Int,
+      test: Array[Byte] => Boolean): Seq[String] = {
+    readSidecar(spark, setIndexDir(root, v),
+      s"snapshot v$v has no set index (committed without one — " +
+        "name it in Sidecars(set = …))")
+      .select("file", "bloom").collect()
+      .filter(r => test(r.getAs[Array[Byte]]("bloom")))
+      .map(_.getString(0)).toSeq.sorted
   }
 
-  /** Read `version` (default latest) pruned by BOTH indexes: files must
-    * survive the zone-map range test on `c` ∈ [lo, hi] AND the set-index
-    * membership probe for `h`. The range residual is applied; the
-    * caller re-applies its exact membership predicate (same soundness
-    * contract as [[readSetPruned]]). */
-  def readPrunedBoth(
-      spark: SparkSession, root: String, c: String, lo: Any, hi: Any, h: Long,
+  /** Read `version` (default latest) with files pruned by its sidecars:
+    * the zone map keeps files whose bounds can intersect every `ranges`
+    * entry, the set index keeps files whose filter might contain `probe`,
+    * and with both the read takes the INTERSECTION (the primary-key plus
+    * secondary-index serve: cluster on time, point-probe on entity). The
+    * range residual conjunction is then applied (pruning is file-granular;
+    * the predicate still runs — and pushes down to row groups — inside
+    * kept files). A probe is SOUND ONLY for predicates that require some
+    * row's key set to contain `probe`: the caller re-applies its exact
+    * predicate, and a pruned file provably has no such row. Multiple
+    * ranges are the read side of a Z-ORDERED layout
+    * (`operators/ZOrder.zValue`): z-contiguous files span a narrow range
+    * of BOTH interleaved dimensions, so a two-predicate probe prunes
+    * multiplicatively — the Delta/Iceberg `OPTIMIZE ZORDER BY` serve.
+    * The kept/total counts are returned for audit.
+    *
+    * The kept-file lists are collected on the driver — O(files) metadata,
+    * the same order every manifest read already costs; a deployment with
+    * millions of files would push this selection into a join against the
+    * sidecar table instead. */
+  def readPruned(
+      spark: SparkSession, root: String,
+      ranges: Seq[(String, Any, Any)] = Seq.empty, probe: Option[Long] = None,
       version: Option[Int] = None): PrunedRead = {
+    require(ranges.nonEmpty || probe.nonEmpty, "readPruned needs a range or a probe")
     val s = snapshot(spark, root, version)
     require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
+    val bySet = probe.map(h => keptBySet(spark, root, s.version,
+      graft.plans.BloomSetAgg.mightContain(_, h)))
+    val byRange =
+      if (ranges.isEmpty) None else Some(keptByRanges(spark, root, s.version, ranges))
     // intersect CANONICAL paths: the two sidecars may render the same
     // file in different URI forms (footer-stats path: Path.toString
     // `file:/…`; set-index path: input_file_name() `file:///…`) — the
     // q154 lesson applied to a cross-SIDECAR comparison
-    val setCanon = keptBySet(spark, root, s.version, h).map(canon).toSet
-    val kept = keptByRange(spark, root, s.version, c, lo, hi)
-      .filter(f => setCanon.contains(canon(f))).sorted
+    val kept = (byRange, bySet) match {
+      case (Some(r), Some(b)) =>
+        val inSet = b.map(canon).toSet
+        r.filter(f => inSet.contains(canon(f)))
+      case _ => byRange.orElse(bySet).get
+    }
+    val residual = ranges.map { case (c, lo, hi) =>
+      col(c) >= lit(lo) && col(c) <= lit(hi)
+    }.reduceOption(_ && _)
     val df =
       if (kept.isEmpty) spark.read.parquet(s.files: _*).filter(lit(false))
-      else spark.read.parquet(kept: _*).filter(col(c) >= lit(lo) && col(c) <= lit(hi))
+      else residual.foldLeft(spark.read.parquet(kept: _*))(_.filter(_))
     PrunedRead(df, kept.size, s.files.size, kept)
   }
 
-  /** Read `version` (default latest) keeping only files whose set index
-    * might contain `h`. SOUND ONLY for predicates that require some
-    * row's key set to contain `h` (the caller re-applies the exact
-    * predicate; a pruned file provably has no such row). Per-file probe
-    * runs on the driver over the sidecar — metadata-scale, like the
-    * zone-map path. */
-  /** The set-index kept-file list for probe `h` on `version`. */
-  private def keptBySet(
-      spark: SparkSession, root: String, version: Int, h: Long): Seq[String] = {
-    val p = setIndexDir(root, version)
-    require(fs(spark, p).exists(p),
-      s"snapshot v$version has no set index (committed without one — " +
-        "use commitWithSetIndex)")
-    spark.read.parquet(p.toString).select("file", "bloom").collect()
-      .filter(r => graft.plans.BloomSetAgg.mightContain(r.getAs[Array[Byte]]("bloom"), h))
-      .map(_.getString(0)).toSeq.sorted
-  }
-
-  def readSetPruned(
-      spark: SparkSession, root: String, h: Long,
-      version: Option[Int] = None): PrunedRead = {
-    val s = snapshot(spark, root, version)
-    require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
-    val kept = keptBySet(spark, root, s.version, h)
-    val df =
-      if (kept.isEmpty) spark.read.parquet(s.files: _*).filter(lit(false))
-      else spark.read.parquet(kept: _*)
-    PrunedRead(df, kept.size, s.files.size, kept)
-  }
+  /** Result of [[aggRangeFromStats]]: one row `(n, sum)` plus the audit
+    * counts (metadata-served / scanned / total files). */
+  final case class AggServed(df: DataFrame, metaFiles: Int, scanFiles: Int, totalFiles: Int)
 
   /** METADATA-ONLY AGGREGATE SERVING — the endgame of the zone-map
     * sidecar: `count(*)` and `sum(measure)` over `lo ≤ c ≤ hi` answered
@@ -813,25 +687,21 @@ object SnapshotSink {
     * ClickHouse's partition-pruned count with the sum riding along.
     * Exact because per-file sums are fixed-point decimals (associative
     * addition) computed from the same committed rows; requires the
-    * snapshot to carry `measure` in `sumCols` at commit time.
+    * snapshot to carry `measure` in `Sidecars.sums` at commit time.
     *
-    * Returns one row `(n, sum)` — `sum` in the sidecar's DECIMAL type;
-    * plus the audit counts (metadata-served / scanned / total files).
-    * One SQL-semantics edge: an all-null measure yields SUM() = NULL in
-    * SQL but 0 here (the metadata path cannot distinguish "no rows"
-    * from "all null") — callers with nullable measures own that
-    * convention. */
-  final case class AggServed(df: DataFrame, metaFiles: Int, scanFiles: Int, totalFiles: Int)
-
+    * `sum` is in the sidecar's DECIMAL type. One SQL-semantics edge: an
+    * all-null measure yields SUM() = NULL in SQL but 0 here (the
+    * metadata path cannot distinguish "no rows" from "all null") —
+    * callers with nullable measures own that convention. */
   def aggRangeFromStats(
       spark: SparkSession, root: String, c: String, lo: Any, hi: Any,
       measure: String, version: Option[Int] = None): AggServed = {
     val s = snapshot(spark, root, version)
     require(s.files.nonEmpty, s"snapshot v${s.version} has no files")
-    val st = statsTable(spark, root, Some(s.version))
+    val st = statsOf(spark, root, s.version)
     require(st.columns.contains(s"${measure}__sum"),
       s"snapshot v${s.version} has no per-file sums for '$measure' " +
-        "(pass it in sumCols at commit time)")
+        "(name it in Sidecars(sums = …) at commit time)")
     val mn = col(s"${c}__min")
     val mx = col(s"${c}__max")
     val overlaps = mn.isNotNull && mx.isNotNull && !(mn > lit(hi) || mx < lit(lo))
@@ -861,62 +731,6 @@ object SnapshotSink {
     AggServed(out, meta.length, boundary.length, s.files.size)
   }
 
-  /** The shared sidecar tail of every targeted maintenance op
-    * (delete/upsert/TTL): write version `version`'s sidecars by
-    * CARRYING the prior version's rows for files whose canonical path
-    * is in `carriedCanon` and recomputing rows for `newFiles`.
-    * WHICHEVER sidecar the prior version carries is extended — a
-    * dual-indexed lineage (commitIndexed with stats AND set keys) stays
-    * dual-indexed through maintenance; a present sidecar whose rebuild
-    * parameters weren't passed is refused loudly rather than silently
-    * severed. Returns the new version's total rows. */
-  private def carrySidecars(
-      spark: SparkSession, root: String, priorVersion: Int, version: Int,
-      carriedCanon: Set[String], newFiles: Seq[String],
-      statsCols: Seq[String], sumCols: Seq[String],
-      setKeys: Option[(org.apache.spark.sql.Column, Long, Double)]): Long = {
-    var rows = -1L
-    def carried(sidecar: DataFrame): DataFrame = {
-      val keepList = sidecar.select("file").collect().map(_.getString(0))
-        .filter(f => carriedCanon.contains(canon(f))).toSeq
-      sidecar.filter(col("file").isin(keepList: _*))
-    }
-    val sd = statsDir(root, priorVersion)
-    if (fs(spark, sd).exists(sd)) {
-      require(statsCols.nonEmpty,
-        "lineage carries a zone-map sidecar — pass its statsCols (and " +
-          "sumCols) so the maintenance op can extend it")
-      val prior = carried(spark.read.parquet(sd.toString))
-      val fresh =
-        if (newFiles.isEmpty) prior.limit(0)
-        else fileStats(spark, newFiles, statsCols, sumCols)._1
-      require(prior.columns.toSet == fresh.columns.toSet,
-        s"stats sidecar schema mismatch: prior has " +
-          s"[${prior.columns.sorted.mkString(",")}], this op computes " +
-          s"[${fresh.columns.sorted.mkString(",")}] — pass the lineage's " +
-          "original statsCols and sumCols")
-      val stats = prior.unionByName(fresh).coalesce(1).localCheckpoint(true)
-      rows = totalRows(stats)
-      stats.write.mode("overwrite").parquet(statsDir(root, version).toString)
-    }
-    val xd = setIndexDir(root, priorVersion)
-    if (fs(spark, xd).exists(xd)) {
-      require(setKeys.nonEmpty,
-        "lineage carries a set index — pass setKeys (keys column, " +
-          "expectedPerFile, fpp) so the maintenance op can extend it")
-      val (keys, expectedPerFile, fpp) = setKeys.get
-      val prior = carried(spark.read.parquet(xd.toString))
-      val idx = (if (newFiles.isEmpty) prior
-        else prior.unionByName(
-          computeSetIndex(spark, newFiles, keys, expectedPerFile, fpp)))
-        .coalesce(1).localCheckpoint(true)
-      if (rows < 0) rows = totalRows(idx)
-      idx.write.mode("overwrite").parquet(setIndexDir(root, version).toString)
-    }
-    require(rows >= 0, "lineage has no sidecars to carry")
-    rows
-  }
-
   /** TARGETED DELETE — the lakehouse DELETE with the Bloom set index
     * doing the file targeting, and the store-side half of the q124
     * right-to-be-forgotten pass: only files whose set index might
@@ -928,35 +742,26 @@ object SnapshotSink {
     * touches the handful of files that user ever landed in. Soundness
     * is the set-index contract: `pred` must imply "this row's key set
     * contains h", so an untouched file provably holds no matching rows.
-    * The set-index sidecar carries over untouched files' rows and
-    * recomputes rewritten ones (with `keys`/`expectedPerFile`/`fpp` —
-    * same parameters as the original commit); prior versions still
-    * time-travel to the pre-deletion data until vacuumed (retention is
-    * the compliance clock: vacuum after the grace window IS the
-    * physical erasure). Requires a set-indexed lineage; zone-map-only
-    * lineages would rewrite blind (no targeting) and are refused. */
+    * `idx` names the lineage's sidecars (it must include the set index);
+    * they carry over for untouched files and are recomputed for
+    * rewritten ones. Prior versions still time-travel to the
+    * pre-deletion data until vacuumed (retention is the compliance
+    * clock: vacuum after the grace window IS the physical erasure). */
   def deleteMatching(
-      spark: SparkSession, root: String, h: Long,
-      pred: org.apache.spark.sql.Column,
-      keys: org.apache.spark.sql.Column,
-      expectedPerFile: Long, fpp: Double = 0.01,
-      statsCols: Seq[String] = Seq.empty,
-      sumCols: Seq[String] = Seq.empty): Snapshot = {
-    val s = snapshot(spark, root)
-    val hitFiles = keptBySet(spark, root, s.version, h)
+      spark: SparkSession, root: String, h: Long, pred: Column,
+      idx: Sidecars): Snapshot = {
+    require(idx.set.nonEmpty,
+      "deleteMatching targets files through the set index — name it in Sidecars(set = …)")
+    val s = tip(spark, root, idx)
+    val hitFiles = keptBySet(spark, root, s.version,
+      graft.plans.BloomSetAgg.mightContain(_, h))
     if (hitFiles.isEmpty) return s // nothing can match — no new version
     val hitCanon = hitFiles.map(canon).toSet
-    val carriedCanon = s.files.map(canon).toSet -- hitCanon
-    val untouched = s.files.filterNot(f => hitCanon.contains(canon(f)))
     val survivors = spark.read.parquet(hitFiles: _*)
       .filter(!coalesce(pred, lit(false)))
       .coalesce(hitFiles.size)
-    val newFiles = writeFiles(survivors, root)
-    val version = s.version + 1
-    val all = (untouched ++ newFiles).sorted
-    val rows = carrySidecars(spark, root, s.version, version, carriedCanon,
-      newFiles, statsCols, sumCols, Some((keys, expectedPerFile, fpp)))
-    writeManifest(spark, root, version, all, rows)
+    commitStep(spark, root, Some(s), s.files.filterNot(f => hitCanon.contains(canon(f))),
+      writeFiles(survivors, root), idx)
   }
 
   /** RANGE EXPIRY — ClickHouse's `TTL … DELETE` / `DROP PARTITION` on
@@ -969,25 +774,22 @@ object SnapshotSink {
     * (≤ the cluster overlap, usually 1) rewrite with the residual
     * filter. All-null-`c` files cannot be classified and are rewritten
     * (the filter keeps null-`c` rows — strict `c < cutoff` deletion,
-    * same null convention as [[deleteMatching]]). Sidecar rows carry
-    * for kept files and recompute for rewritten ones — pass the same
-    * `statsCols`/`sumCols` the lineage was committed with (the sidecar
-    * union is schema-checked); prior versions time-travel until vacuum,
-    * which is the retention/erasure clock. */
+    * same null convention as [[deleteMatching]]). `idx` names the
+    * lineage's sidecars, `c` among its stats; sidecar rows carry for
+    * kept files and are recomputed for rewritten ones. Prior versions
+    * time-travel until vacuum, which is the retention/erasure clock. */
   def expireBelow(
       spark: SparkSession, root: String, c: String, cutoff: Any,
-      statsCols: Seq[String], sumCols: Seq[String] = Seq.empty,
-      setKeys: Option[(org.apache.spark.sql.Column, Long, Double)] = None): Snapshot = {
-    require(statsCols.contains(c), s"expiry column '$c' must be a stats column")
-    val s = snapshot(spark, root)
-    val st = statsTable(spark, root, Some(s.version))
+      idx: Sidecars): Snapshot = {
+    require(idx.stats.contains(c), s"expiry column '$c' must be a stats column")
+    val s = tip(spark, root, idx)
     val mn = col(s"${c}__min")
     val mx = col(s"${c}__max")
     // a whole-file drop must prove EVERY row matches `c < cutoff` —
     // null-c rows are invisible to min/max but kept by the strict-<
     // policy, so any file carrying nulls can at most be rewritten;
     // whole-file keeps are safe with nulls (null rows are kept anyway)
-    val parts = st.select(col("file"),
+    val parts = statsOf(spark, root, s.version).select(col("file"),
         (mx.isNotNull && mx < lit(cutoff) &&
           col(s"${c}__nulls") === lit(0L)).as("drop"),
         (mn.isNotNull && mn >= lit(cutoff)).as("keep"))
@@ -996,22 +798,18 @@ object SnapshotSink {
       .map(r => canon(r.getString(0))).toSet
     // dropped files need no action at all — they are simply absent from
     // the next manifest; boundary = neither kept nor dropped
-    val boundarySidecar = parts
+    val boundary = parts
       .filter(r => !r.getAs[Boolean]("keep") && !r.getAs[Boolean]("drop"))
       .map(_.getString(0)).toSeq.sorted
-    val kept = s.files.filter(f => keepCanon.contains(canon(f)))
     val newFiles =
-      if (boundarySidecar.isEmpty) Seq.empty[String]
+      if (boundary.isEmpty) Seq.empty[String]
       else writeFiles(
-        spark.read.parquet(boundarySidecar: _*)
+        spark.read.parquet(boundary: _*)
           .filter(col(c).isNull || col(c) >= lit(cutoff))
-          .coalesce(boundarySidecar.size),
+          .coalesce(boundary.size),
         root)
-    val version = s.version + 1
-    val all = (kept ++ newFiles).sorted
-    val rows = carrySidecars(spark, root, s.version, version, keepCanon,
-      newFiles, statsCols, sumCols, setKeys)
-    writeManifest(spark, root, version, all, rows)
+    commitStep(spark, root, Some(s), s.files.filter(f => keepCanon.contains(canon(f))),
+      newFiles, idx)
   }
 
   /** KEYED UPSERT — the ReplacingMergeTree merge made explicit on the
@@ -1021,55 +819,40 @@ object SnapshotSink {
     * keys insert, and only the files whose set index might contain a
     * batch key are rewritten — O(victim files + batch), never O(table).
     * The per-file test is a multi-probe of the file's Bloom against the
-    * batch's distinct key hashes (driver-side, files × batch-keys —
-    * metadata × batch, the "batch ≪ table" shape every upsert assumes;
-    * the batch's distinct hashes are collected, which is the same
-    * bound). Rewrite = LWW over (hit-file rows ∪ batch) via
-    * `etl.Dedup.lastWriteWins` — the q14/O-21 semantics; Bloom false
-    * positives only widen the rewrite set, and a key in NO file is
-    * simply inserted (it rides the union). Batch schema must match the
-    * stored schema (unionByName). Prior versions time-travel. */
+    * batch's distinct key hashes (`idx.set`'s keys over the batch;
+    * driver-side, files × batch-keys — metadata × batch, the "batch ≪
+    * table" shape every upsert assumes; the batch's distinct hashes are
+    * collected, which is the same bound). Rewrite = LWW over (hit-file
+    * rows ∪ batch) via `etl.Dedup.lastWriteWins` — the q14/O-21
+    * semantics; Bloom false positives only widen the rewrite set, and a
+    * key in NO file is simply inserted (it rides the union). Batch schema
+    * must match the stored schema (unionByName). Prior versions
+    * time-travel. */
   def upsertKeyed(
       spark: SparkSession, root: String, batch: DataFrame,
-      keyCols: Seq[String], verCol: String,
-      tieBreak: Seq[org.apache.spark.sql.Column],
-      keys: org.apache.spark.sql.Column,
-      expectedPerFile: Long, fpp: Double = 0.01,
-      statsCols: Seq[String] = Seq.empty,
-      sumCols: Seq[String] = Seq.empty): Snapshot = {
+      keyCols: Seq[String], verCol: String, tieBreak: Seq[Column],
+      idx: Sidecars): Snapshot = {
     require(keyCols.nonEmpty, "upsertKeyed needs key columns")
-    val s = snapshot(spark, root)
-    val idxPath = setIndexDir(root, s.version)
-    require(fs(spark, idxPath).exists(idxPath),
-      s"snapshot v${s.version} has no set index (upsert needs key targeting — " +
-        "use commitWithSetIndex)")
+    val set = idx.set.getOrElse(throw new IllegalArgumentException(
+      "upsertKeyed targets files through the set index — name it in Sidecars(set = …)"))
+    val s = tip(spark, root, idx)
     // the batch's distinct key hashes — bounded by the batch
-    val ksDf = batch.select(keys.as("ks"))
+    val ksDf = batch.select(set.keys.as("ks"))
     val hashes: Array[Long] = (ksDf.schema("ks").dataType match {
-      case org.apache.spark.sql.types.ArrayType(_, _) =>
-        ksDf.select(explode(col("ks")).as("h"))
+      case ArrayType(_, _) => ksDf.select(explode(col("ks")).as("h"))
       case _ => ksDf.select(col("ks").as("h"))
     }).filter(col("h").isNotNull).distinct().collect().map(_.getLong(0))
-    val sidecar = spark.read.parquet(idxPath.toString)
-    val parts = sidecar.select("file", "bloom").collect()
-    val hitSidecarFiles = parts.filter(r =>
-        graft.plans.BloomSetAgg.mightContainAny(r.getAs[Array[Byte]]("bloom"), hashes))
-      .map(_.getString(0)).toSeq.sorted
-    val hitCanon = hitSidecarFiles.map(canon).toSet
-    val untouched = s.files.filterNot(f => hitCanon.contains(canon(f)))
+    val hitFiles = keptBySet(spark, root, s.version,
+      graft.plans.BloomSetAgg.mightContainAny(_, hashes))
+    val hitCanon = hitFiles.map(canon).toSet
     val stored =
-      if (hitSidecarFiles.isEmpty) batch.filter(lit(false))
-      else spark.read.parquet(hitSidecarFiles: _*)
+      if (hitFiles.isEmpty) batch.filter(lit(false))
+      else spark.read.parquet(hitFiles: _*)
     val resolved = graft.etl.Dedup.lastWriteWins(
       stored.unionByName(batch), keyCols, verCol, tieBreak)
-      .coalesce(math.max(1, hitSidecarFiles.size))
-    val newFiles = writeFiles(resolved, root)
-    val version = s.version + 1
-    val all = (untouched ++ newFiles).sorted
-    val carriedCanon = s.files.map(canon).toSet -- hitCanon
-    val rows = carrySidecars(spark, root, s.version, version, carriedCanon,
-      newFiles, statsCols, sumCols, Some((keys, expectedPerFile, fpp)))
-    writeManifest(spark, root, version, all, rows)
+      .coalesce(math.max(1, hitFiles.size))
+    commitStep(spark, root, Some(s), s.files.filterNot(f => hitCanon.contains(canon(f))),
+      writeFiles(resolved, root), idx)
   }
 
   /** COMPACTION — the explicit form of ClickHouse's background part
@@ -1084,34 +867,31 @@ object SnapshotSink {
     * ranges, which is exactly what a MergeTree merge does to sorted
     * parts). Costs O(table) I/O by definition; rows are bit-identical.
     * Readers are never disturbed: the old version keeps its files until
-    * vacuumed, the new version is one manifest rename away. Sidecars
-    * (`statsCols` / `setKeys`) are recomputed for the new layout. */
+    * vacuumed, the new version is one manifest rename away. `idx` names
+    * the lineage's sidecars, which are recomputed for the new layout. */
   def compact(
       spark: SparkSession, root: String, targetFiles: Int,
       clusterCol: Option[String] = None,
-      statsCols: Seq[String] = Seq.empty,
-      setKeys: Option[(org.apache.spark.sql.Column, Long, Double)] = None,
-      sumCols: Seq[String] = Seq.empty): Snapshot = {
+      idx: Sidecars = Sidecars()): Snapshot = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    val s = snapshot(spark, root)
+    val s = tip(spark, root, idx)
     require(s.files.nonEmpty, s"snapshot v${s.version} has no files to compact")
     val df = spark.read.parquet(s.files: _*)
     val laid = clusterCol match {
       case Some(c) => df.repartitionByRange(targetFiles, col(c))
       case None => df.coalesce(targetFiles)
     }
-    if (statsCols.nonEmpty || setKeys.nonEmpty)
-      commitIndexed(laid, root, statsCols, setKeys, sumCols)
-    else commit(laid, root)
+    commitStep(spark, root, Some(s), Seq.empty, writeFiles(laid, root), idx)
   }
 
-  /** Retire everything but the last `keepLast` snapshots: drops their
-    * manifests, then deletes every `data/` subdirectory no kept manifest
-    * references — which also sweeps crashed-commit orphans and
-    * `.tmp` manifests. Readers of kept snapshots are untouched (their
-    * files are never deleted); readers of dropped snapshots race with
-    * the delete exactly as they would with any retention policy, which
-    * is why `keepLast` exists. Returns the dropped version numbers.
+  /** Retire every snapshot except the last `keepLast` and the published
+    * one ([[publish]]): drops their manifests, then deletes every `data/`
+    * subdirectory no kept manifest references — which also sweeps
+    * crashed-commit orphans and `.tmp` manifests. Readers of kept
+    * snapshots, [[readPublished]] among them, are untouched (their files
+    * are never deleted); readers of dropped snapshots race with the
+    * delete exactly as they would with any retention policy, which is why
+    * `keepLast` exists. Returns the dropped version numbers.
     *
     * In-flight-commit safety (r7 advisor finding): a commit between
     * "data written" and "manifest renamed" looks exactly like a crashed
@@ -1133,8 +913,10 @@ object SnapshotSink {
     require(keepLast >= 1, "must keep at least the latest snapshot")
     require(orphanGraceMs >= 0L, "orphanGraceMs must be >= 0")
     val vs = versions(spark, root)
-    val dropped = vs.dropRight(keepLast)
-    val kept = vs.takeRight(keepLast)
+    val published = publishedVersion(spark, root).toSet
+    val dropped = vs.dropRight(keepLast).filterNot(published)
+    val droppedSet = dropped.toSet
+    val kept = vs.filterNot(droppedSet)
     def dirsOf(versions: Seq[Int]): Set[String] = versions
       .flatMap(v => snapshot(spark, root, Some(v)).files)
       .map(f => new Path(f).getParent.toString).toSet
@@ -1148,7 +930,6 @@ object SnapshotSink {
       // re-read AFTER the listing: a manifest committed while we listed
       // may reference a dir that looked orphaned a moment ago (the
       // to-be-dropped manifests don't count — their dirs ARE retired)
-      val droppedSet = dropped.toSet
       val nowReferenced = dirsOf(versions(spark, root).filterNot(droppedSet))
       val cutoff = System.currentTimeMillis() - orphanGraceMs
       candidates

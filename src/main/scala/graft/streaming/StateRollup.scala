@@ -110,9 +110,10 @@ object StateRollup {
   /** CORPUS-TABLE maintenance twin: where the two state variants fold
     * micro-batches into state-SIZED tables, this one GROWS a corpus-sized
     * table — each micro-batch lands as an add-files append
-    * ([[SnapshotSink.appendWithStats]]: O(batch) write I/O, prior files
-    * referenced verbatim) with the zone-map sidecar extended in the same
-    * pass, so the store stays range-skippable ([[SnapshotSink.readPruned]])
+    * ([[SnapshotSink.append]] naming the stats sidecar: O(batch) write
+    * I/O, prior files referenced verbatim) with the zone-map sidecar
+    * extended by the batch's files, so the store stays range-skippable
+    * ([[SnapshotSink.readPruned]])
     * while it grows. `clusterCol` range-clusters each batch's files so
     * their bounds are tight (the ClickHouse ORDER BY discipline applied
     * per part, q144's layout lever); un-clustered batches still index,
@@ -147,7 +148,7 @@ object StateRollup {
               case Some(c) => b.repartitionByRange(filesPerBatch, col(c))
               case None => b.coalesce(filesPerBatch)
             }
-            SnapshotSink.appendWithStats(laid, root, statsCols)
+            SnapshotSink.append(laid, root, SnapshotSink.Sidecars(stats = statsCols))
             markCommitted(spark, root, batchId)
             if (keepVersions != Int.MaxValue)
               SnapshotSink.vacuum(spark, root, keepLast = keepVersions)
@@ -184,6 +185,8 @@ object StateRollup {
       keepVersions: Int = 3
   ): StreamingQuery = {
     require(keepVersions >= 1, "keepVersions must be >= 1")
+    val idx = SnapshotSink.Sidecars(
+      set = Some(SnapshotSink.SetIndex(keys, expectedPerFile)))
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
@@ -194,12 +197,10 @@ object StateRollup {
           if (!alreadyCommitted(spark, root, batchId) && b.take(1).nonEmpty) {
             if (SnapshotSink.versions(spark, root).isEmpty) {
               val winners = graft.etl.Dedup.lastWriteWins(b, keyCols, verCol, tieBreak)
-              SnapshotSink.commitWithSetIndex(
-                winners.repartition(buckets, keyCols.map(col): _*),
-                root, keys, expectedPerFile)
+              SnapshotSink.commit(
+                winners.repartition(buckets, keyCols.map(col): _*), root, idx)
             } else {
-              SnapshotSink.upsertKeyed(spark, root, b, keyCols, verCol,
-                tieBreak, keys, expectedPerFile)
+              SnapshotSink.upsertKeyed(spark, root, b, keyCols, verCol, tieBreak, idx)
             }
             markCommitted(spark, root, batchId)
             if (keepVersions != Int.MaxValue)

@@ -45,7 +45,10 @@ object StoreScaleCheck {
     }
     def h(s: String) =
       PortableSketch.md5Long(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    def keys = SketchFunctions.portableHash64(array(col("entity").cast("string")))
+    // every store below carries the same sidecars, and every write names them
+    val idx = SnapshotSink.Sidecars(stats = Seq("day"), sums = Seq("value"),
+      set = Some(SnapshotSink.SetIndex(
+        SketchFunctions.portableHash64(array(col("entity").cast("string"))), 200000L)))
 
     // entity-bucketed layout: entity = id mod buckets·16 (so ~16
     // entities per file), day rides along for the TTL/agg paths
@@ -56,10 +59,7 @@ object StoreScaleCheck {
 
     def freshStore(): String = {
       val root = Files.createTempDirectory("store_scale").toString
-      SnapshotSink.commitIndexed(
-        synthetic(n).repartition(buckets, col("entity")), root,
-        statsCols = Seq("day"), setKeys = Some((keys, 200000L, 0.01)),
-        sumCols = Seq("value"))
+      SnapshotSink.commit(synthetic(n).repartition(buckets, col("entity")), root, idx)
       root
     }
 
@@ -69,14 +69,13 @@ object StoreScaleCheck {
 
     // DELETE one entity — targeted vs full rewrite
     val (tDel, s2) = time(SnapshotSink.deleteMatching(
-      spark, root, h("7"), col("entity") === 7L, keys, 200000L))
+      spark, root, h("7"), col("entity") === 7L, idx))
     val rewrittenDel = s2.files.toSet
       .diff(SnapshotSink.snapshot(spark, root, Some(s2.version - 1)).files.toSet).size
     val (tDelFull, _) = time {
       val all = SnapshotSink.read(spark, root)
         .filter(!(col("entity") === 8L)).repartition(buckets, col("entity"))
-      SnapshotSink.commitIndexed(all, root, Seq("day"),
-        Some((keys, 200000L, 0.01)), Seq("value"))
+      SnapshotSink.commit(all, root, idx)
     }
     println(f"delete targeted:             $tDel%8.2f s ($rewrittenDel files rewritten)")
     println(f"delete full-rewrite:         $tDelFull%8.2f s ($buckets files rewritten)")
@@ -87,8 +86,7 @@ object StoreScaleCheck {
       (col("id") % 5).as("entity"), lit(999L).as("day"),
       lit(java.math.BigDecimal.valueOf(1.5)).cast("decimal(18,6)").as("value"))
     val (tUp, s3) = time(SnapshotSink.upsertKeyed(
-      spark, root2, batch, Seq("entity"), "day", Seq(col("value").desc),
-      keys, 200000L))
+      spark, root2, batch, Seq("entity"), "day", Seq(col("value").desc), idx))
     val rewrittenUp = s3.files.toSet
       .diff(SnapshotSink.snapshot(spark, root2, Some(s3.version - 1)).files.toSet).size
     val (tUpFull, _) = time {
@@ -96,17 +94,16 @@ object StoreScaleCheck {
         SnapshotSink.read(spark, root2).unionByName(batch),
         Seq("entity"), "day", Seq(col("value").desc))
         .repartition(buckets, col("entity"))
-      SnapshotSink.commitIndexed(merged, root2, Seq("day"),
-        Some((keys, 200000L, 0.01)), Seq("value"))
+      SnapshotSink.commit(merged, root2, idx)
     }
     println(f"upsert targeted:             $tUp%8.2f s ($rewrittenUp files rewritten)")
     println(f"upsert full-rewrite:         $tUpFull%8.2f s ($buckets files rewritten)")
 
     // RANGE AGG — metadata-served vs full scan (day-clustered lineage)
     val root3 = Files.createTempDirectory("store_scale_day").toString
-    SnapshotSink.commitIndexed(
-      synthetic(n).repartitionByRange(buckets, col("day")), root3,
-      statsCols = Seq("day"), setKeys = None, sumCols = Seq("value"))
+    val dayIdx = idx.copy(set = None)
+    SnapshotSink.commit(
+      synthetic(n).repartitionByRange(buckets, col("day")), root3, dayIdx)
     val (tMeta, served) = time {
       val a = SnapshotSink.aggRangeFromStats(spark, root3, "day", 100L, 259L, "value")
       (a.df.collect(), a.metaFiles, a.scanFiles)
@@ -121,13 +118,13 @@ object StoreScaleCheck {
 
     // TTL — manifest drop + boundary rewrite vs full rewrite
     val (tTtl, s4) = time(
-      SnapshotSink.expireBelow(spark, root3, "day", 180L, Seq("day"), Seq("value")))
+      SnapshotSink.expireBelow(spark, root3, "day", 180L, dayIdx))
     println(f"ttl targeted:                $tTtl%8.2f s (${s4.files.size} files after)")
     val (tTtlFull, _) = time {
-      SnapshotSink.commitIndexed(
+      SnapshotSink.commit(
         SnapshotSink.read(spark, root3).filter(col("day") >= 180L)
           .repartitionByRange(buckets, col("day")),
-        root3, Seq("day"), None, Seq("value"))
+        root3, dayIdx)
     }
     println(f"ttl full-rewrite:            $tTtlFull%8.2f s")
     spark.stop()

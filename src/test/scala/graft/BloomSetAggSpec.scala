@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.plans.{BloomSetAgg, PortableSketch, SketchFunctions}
 import graft.functions.TextAnalysis
 import graft.sink.SnapshotSink
+import graft.sink.SnapshotSink.{SetIndex, Sidecars}
 
 class BloomSetAggSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -55,21 +56,21 @@ class BloomSetAggSpec extends AnyFunSuite {
       .select(col("id").as("doc_id"),
         concat(lit("word"), (col("id") / 100).cast("long"),
           lit(" filler common text id"), col("id")).as("text"))
-    SnapshotSink.commitWithSetIndex(
-      docs.repartitionByRange(8, col("doc_id")), root,
-      keys = SketchFunctions.portableHash64(TextAnalysis.tokens(col("text"))),
-      expectedPerFile = 512)
-    val pr = SnapshotSink.readSetPruned(spark, root, h("word3"))
+    SnapshotSink.commit(
+      docs.repartitionByRange(8, col("doc_id")), root, Sidecars(set = Some(SetIndex(
+        keys = SketchFunctions.portableHash64(TextAnalysis.tokens(col("text"))),
+        expectedPerFile = 512))))
+    val pr = SnapshotSink.readPruned(spark, root, probe = Some(h("word3")))
     assert(pr.totalFiles == 8)
     assert(pr.keptFiles <= 2) // 1 + possible rare fp
     val got = pr.df.filter(array_contains(TextAnalysis.tokens(col("text")), "word3"))
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(got == (300L until 400L).toSet)
     // the common word keeps everything — and still answers exactly
-    val all = SnapshotSink.readSetPruned(spark, root, h("filler"))
+    val all = SnapshotSink.readPruned(spark, root, probe = Some(h("filler")))
     assert(all.keptFiles == 8)
     // absent word: all files pruned (w.h.p.), schema preserved
-    val none = SnapshotSink.readSetPruned(spark, root, h("absent-token-zz"))
+    val none = SnapshotSink.readPruned(spark, root, probe = Some(h("absent-token-zz")))
     assert(none.df.columns.toSeq == Seq("doc_id", "text"))
     assert(none.df.count() == 0 || none.keptFiles <= 1) // fp tolerance
   }
@@ -85,12 +86,12 @@ class BloomSetAggSpec extends AnyFunSuite {
       .select((col("id") % 80).as("day"),
         expr("(id % 80) DIV 10").as("entity"), // entity 0..7 tied to day decade
         col("id").as("v"))
-    SnapshotSink.commitIndexed(
-      rows.repartitionByRange(8, col("day")), root, Seq("day"),
-      Some((SketchFunctions.portableHash64(array(col("entity").cast("string"))),
-        256L, 0.01)))
+    SnapshotSink.commit(
+      rows.repartitionByRange(8, col("day")), root, Sidecars(Seq("day"),
+        set = Some(SetIndex(SketchFunctions.portableHash64(
+          array(col("entity").cast("string"))), 256L))))
     val h3 = h("3") // entity 3 lives only on days 30..39
-    val both = SnapshotSink.readPrunedBoth(spark, root, "day", 30L, 39L, h3)
+    val both = SnapshotSink.readPruned(spark, root, Seq(("day", 30L, 39L)), Some(h3))
     assert(both.totalFiles == 8 && both.keptFiles <= 2)
     val got = both.df.filter(col("entity") === 3L)
       .agg(count(lit(1)), sum("v")).head()
@@ -100,7 +101,7 @@ class BloomSetAggSpec extends AnyFunSuite {
     assert(got.getLong(0) == want.getLong(0) && got.getLong(1) == want.getLong(1))
     // disjoint dimensions: day range where the entity never occurs →
     // empty intersection w.h.p., and the read still answers (empty)
-    val none = SnapshotSink.readPrunedBoth(spark, root, "day", 70L, 79L, h3)
+    val none = SnapshotSink.readPruned(spark, root, Seq(("day", 70L, 79L)), Some(h3))
     assert(none.df.filter(col("entity") === 3L).count() == 0)
   }
 
@@ -111,15 +112,15 @@ class BloomSetAggSpec extends AnyFunSuite {
       .select((col("id") % 100).as("day"),
         expr("(id % 100) DIV 25").as("entity"), col("id").as("v"))
     def keys = SketchFunctions.portableHash64(array(col("entity").cast("string")))
-    SnapshotSink.commitIndexed(
-      slab(0, 200).repartitionByRange(4, col("day")), root, Seq("day"),
-      Some((keys, 128L, 0.01)))
-    val s2 = SnapshotSink.appendIndexed(
-      slab(200, 400).repartitionByRange(4, col("day")), root, Seq("day"),
-      Some((keys, 128L, 0.01)))
+    SnapshotSink.commit(
+      slab(0, 200).repartitionByRange(4, col("day")), root,
+      Sidecars(Seq("day"), set = Some(SetIndex(keys, 128L))))
+    val s2 = SnapshotSink.append(
+      slab(200, 400).repartitionByRange(4, col("day")), root,
+      Sidecars(Seq("day"), set = Some(SetIndex(keys, 128L))))
     assert(s2.version == 2 && s2.rows == 400)
     assert(SnapshotSink.statsTable(spark, root).count() == 8)
-    val both = SnapshotSink.readPrunedBoth(spark, root, "day", 25L, 49L, h("1"))
+    val both = SnapshotSink.readPruned(spark, root, Seq(("day", 25L, 49L)), Some(h("1")))
     assert(both.totalFiles == 8 && both.keptFiles <= 4) // entity 1 = days 25..49 slabs
     val got = both.df.filter(col("entity") === 1L).agg(sum("v")).head().getLong(0)
     val want = slab(0, 400).filter(col("entity") === 1L).agg(sum("v")).head().getLong(0)
@@ -128,8 +129,8 @@ class BloomSetAggSpec extends AnyFunSuite {
     val root2 = tmpRoot()
     SnapshotSink.commit(slab(0, 10), root2)
     val e = intercept[IllegalArgumentException](
-      SnapshotSink.appendIndexed(slab(10, 20), root2, Seq.empty,
-        Some((keys, 32L, 0.01))))
+      SnapshotSink.append(slab(10, 20), root2,
+        Sidecars(set = Some(SetIndex(keys, 32L)))))
     assert(e.getMessage.contains("no set index"))
   }
 
@@ -143,10 +144,10 @@ class BloomSetAggSpec extends AnyFunSuite {
       .select(when(col("v") === 342L, lit(null)).otherwise(col("entity")).as("entity"),
         col("v"))
     def keys = SketchFunctions.portableHash64(array(col("entity").cast("string")))
-    val s1 = SnapshotSink.commitWithSetIndex(
-      rows.repartition(8, col("entity")), root, keys, expectedPerFile = 256)
+    val idx = Sidecars(set = Some(SetIndex(keys, expectedPerFile = 256)))
+    val s1 = SnapshotSink.commit(rows.repartition(8, col("entity")), root, idx)
     val s2 = SnapshotSink.deleteMatching(spark, root, h("3"),
-      pred = col("entity") === 3L, keys = keys, expectedPerFile = 256)
+      pred = col("entity") === 3L, idx = idx)
     assert(s2.version == 2)
     // only the victim's file(s) were rewritten — everything else
     // verbatim (hash-bucket collisions and Bloom fps can add a file or
@@ -161,13 +162,13 @@ class BloomSetAggSpec extends AnyFunSuite {
     assert(left.filter(col("entity").isNull).count() == 1)
     assert(s2.rows == 800L - 99L) // 100 entity-3 rows minus the null twin
     // the rebuilt index no longer claims entity 3 anywhere (modulo fp)
-    assert(SnapshotSink.readSetPruned(spark, root, h("3")).keptFiles <= 1)
+    assert(SnapshotSink.readPruned(spark, root, probe = Some(h("3"))).keptFiles <= 1)
     // pre-deletion version still time-travels until vacuumed
     assert(SnapshotSink.read(spark, root, Some(1))
       .filter(col("entity") === 3L).count() == 99)
     // probing an absent entity: no version bump, same snapshot back
     val s3 = SnapshotSink.deleteMatching(spark, root, h("zz-absent"),
-      pred = col("entity") === 99L, keys = keys, expectedPerFile = 256)
+      pred = col("entity") === 99L, idx = idx)
     assert(s3.version == 2)
   }
 
@@ -179,8 +180,8 @@ class BloomSetAggSpec extends AnyFunSuite {
       .select(col("id").as("k"), lit(1L).as("ver"),
         concat(lit("old"), col("id")).as("p"))
     def keys = SketchFunctions.portableHash64(array(col("k").cast("string")))
-    val s1 = SnapshotSink.commitWithSetIndex(
-      base.repartition(4, col("k")), root, keys, expectedPerFile = 64)
+    val idx = Sidecars(set = Some(SetIndex(keys, expectedPerFile = 64)))
+    val s1 = SnapshotSink.commit(base.repartition(4, col("k")), root, idx)
     // batch: k=7 updated twice (ver 3 wins), k=8 stale (ver 0 loses),
     // k=100 brand new
     val batch = Seq(
@@ -188,8 +189,7 @@ class BloomSetAggSpec extends AnyFunSuite {
       (8L, 0L, "stale8"),
       (100L, 5L, "new100")).toDF("k", "ver", "p")
     val s2 = SnapshotSink.upsertKeyed(spark, root, batch,
-      keyCols = Seq("k"), verCol = "ver", tieBreak = Seq(col("p").asc),
-      keys = keys, expectedPerFile = 64)
+      keyCols = Seq("k"), verCol = "ver", tieBreak = Seq(col("p").asc), idx = idx)
     assert(s2.version == 2 && s2.rows == 41L) // 40 keys + inserted 100
     val m = SnapshotSink.read(spark, root).collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
@@ -201,18 +201,18 @@ class BloomSetAggSpec extends AnyFunSuite {
     val carried = s1.files.toSet intersect s2.files.toSet
     assert(carried.nonEmpty && carried.size < s1.files.size)
     // the new version's index resolves the inserted key
-    assert(SnapshotSink.readSetPruned(spark, root, h("100")).keptFiles >= 1)
+    assert(SnapshotSink.readPruned(spark, root, probe = Some(h("100"))).keptFiles >= 1)
     // v1 still time-travels to the pre-upsert state
     assert(SnapshotSink.read(spark, root, Some(1)).count() == 40L)
   }
 
   test("set skipping index: vacuum sweeps retired and orphan .setidx sidecars") {
     val root = tmpRoot()
-    SnapshotSink.commitWithSetIndex(
-      Seq((1L, "a b")).toDF("k", "text"), root,
-      keys = graft.plans.SketchFunctions.portableHash64(
-        graft.functions.TextAnalysis.tokens(org.apache.spark.sql.functions.col("text"))),
-      expectedPerFile = 16)
+    SnapshotSink.commit(
+      Seq((1L, "a b")).toDF("k", "text"), root, Sidecars(set = Some(SetIndex(
+        keys = graft.plans.SketchFunctions.portableHash64(
+          graft.functions.TextAnalysis.tokens(org.apache.spark.sql.functions.col("text"))),
+        expectedPerFile = 16))))
     SnapshotSink.commit(Seq((2L, "c")).toDF("k", "text"), root)
     new java.io.File(s"$root/_manifests/v9.setidx").mkdirs()
     SnapshotSink.vacuum(spark, root, keepLast = 1, orphanGraceMs = 0L)
@@ -220,7 +220,7 @@ class BloomSetAggSpec extends AnyFunSuite {
     assert(!new java.io.File(s"$root/_manifests/v9.setidx").exists())
     // and reading a version without an index raises the pointed message
     val e = intercept[IllegalArgumentException](
-      SnapshotSink.readSetPruned(spark, root, 42L))
-    assert(e.getMessage.contains("commitWithSetIndex"))
+      SnapshotSink.readPruned(spark, root, probe = Some(42L)))
+    assert(e.getMessage.contains("no set index"))
   }
 }

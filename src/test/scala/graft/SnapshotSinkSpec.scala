@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sink.SnapshotSink
+import graft.sink.SnapshotSink.{SetIndex, Sidecars}
 
 class SnapshotSinkSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -142,8 +143,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
     // covers a tight disjoint k-range, the layout pruning needs
     val df = spark.range(100).select(col("id").as("k"),
       (col("id") % 7).as("v"))
-    val snap = SnapshotSink.commitWithStats(
-      df.repartitionByRange(10, col("k")), root, Seq("k"))
+    val snap = SnapshotSink.commit(
+      df.repartitionByRange(10, col("k")), root, Sidecars(Seq("k")))
     assert(snap.rows == 100 && snap.files.size == 10)
 
     val st = SnapshotSink.statsTable(spark, root)
@@ -156,13 +157,13 @@ class SnapshotSinkSpec extends AnyFunSuite {
     })
 
     // a 10-wide probe keeps ~1-2 of 10 files and still answers exactly
-    val pr = SnapshotSink.readPruned(spark, root, "k", 40L, 49L)
+    val pr = SnapshotSink.readPruned(spark, root, Seq(("k", 40L, 49L)))
     assert(pr.totalFiles == 10 && pr.keptFiles < 10)
     assert(pr.df.agg(count(lit(1)), sum("k")).head() match {
       case r => r.getLong(0) == 10L && r.getLong(1) == (40L to 49L).sum
     })
     // out-of-range probe: every file pruned, schema intact, zero rows
-    val none = SnapshotSink.readPruned(spark, root, "k", 1000L, 2000L)
+    val none = SnapshotSink.readPruned(spark, root, Seq(("k", 1000L, 2000L)))
     assert(none.keptFiles == 0 && none.df.count() == 0L)
     assert(none.df.columns.toSeq == Seq("k", "v"))
   }
@@ -170,18 +171,18 @@ class SnapshotSinkSpec extends AnyFunSuite {
   test("zone maps: appendWithStats extends the sidecar O(batch); vacuum sweeps retired and orphan sidecars") {
     import org.apache.spark.sql.functions._
     val root = tmpRoot()
-    SnapshotSink.commitWithStats(
+    SnapshotSink.commit(
       spark.range(0, 50).select(col("id").as("k")).repartitionByRange(5, col("k")),
-      root, Seq("k"))
-    val s2 = SnapshotSink.appendWithStats(
+      root, Sidecars(Seq("k")))
+    val s2 = SnapshotSink.append(
       spark.range(50, 100).select(col("id").as("k")).repartitionByRange(5, col("k")),
-      root, Seq("k"))
+      root, Sidecars(Seq("k")))
     assert(s2.version == 2 && s2.rows == 100)
     // v2 sidecar covers BOTH batches' files; v1's is untouched
     assert(SnapshotSink.statsTable(spark, root, Some(1)).count() == 5)
     assert(SnapshotSink.statsTable(spark, root, Some(2)).count() == 10)
     // pruning works across the append boundary
-    val pr = SnapshotSink.readPruned(spark, root, "k", 90L, 99L)
+    val pr = SnapshotSink.readPruned(spark, root, Seq(("k", 90L, 99L)))
     assert(pr.totalFiles == 10 && pr.keptFiles < 10 && pr.df.count() == 10L)
 
     // an orphan sidecar from a crashed commit + vacuum: retired v1
@@ -203,19 +204,19 @@ class SnapshotSinkSpec extends AnyFunSuite {
     (0 until 3).foreach { b =>
       val batch = spark.range(0, 300).filter(col("id") % 3 === b)
         .select(col("id").as("k")).repartitionByRange(4, col("k"))
-      if (b == 0) SnapshotSink.commitWithStats(batch, root, Seq("k"))
-      else SnapshotSink.appendIndexed(batch, root, Seq("k"), None)
+      if (b == 0) SnapshotSink.commit(batch, root, Sidecars(Seq("k")))
+      else SnapshotSink.append(batch, root, Sidecars(Seq("k")))
     }
     assert(SnapshotSink.snapshot(spark, root).files.size == 12)
     // pre-compaction: a narrow probe keeps a file from EVERY batch
-    val before = SnapshotSink.readPruned(spark, root, "k", 100L, 124L)
+    val before = SnapshotSink.readPruned(spark, root, Seq(("k", 100L, 124L)))
     assert(before.keptFiles >= 3)
 
     val c = SnapshotSink.compact(spark, root, targetFiles = 4,
-      clusterCol = Some("k"), statsCols = Seq("k"))
+      clusterCol = Some("k"), idx = Sidecars(Seq("k")))
     assert(c.version == 4 && c.rows == 300 && c.files.size == 4)
     // identical rows, tighter layout: the same probe now keeps 1 file
-    val after = SnapshotSink.readPruned(spark, root, "k", 100L, 124L)
+    val after = SnapshotSink.readPruned(spark, root, Seq(("k", 100L, 124L)))
     assert(after.totalFiles == 4 && after.keptFiles == 1)
     assert(after.df.agg(sum("k")).head().getLong(0) ==
       before.df.agg(sum("k")).head().getLong(0))
@@ -238,8 +239,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
     // decimal(18,6)); nulls planted to prove sum skips them
     val df = spark.range(100).select(col("id").as("k"),
       when(col("id") % 10 === 9, lit(null)).otherwise(col("id") / lit(2.0)).as("m"))
-    SnapshotSink.commitIndexed(df.repartitionByRange(10, col("k")), root,
-      Seq("k"), None, sumCols = Seq("m"))
+    SnapshotSink.commit(df.repartitionByRange(10, col("k")), root,
+      Sidecars(Seq("k"), sums = Seq("m")))
     // [15, 74]: files [20,29]..[60,69] fully contained (5), [10,19] and
     // [70,79] are boundary (2), the rest pruned outright
     val served = SnapshotSink.aggRangeFromStats(spark, root, "k", 15L, 74L, "m")
@@ -260,7 +261,7 @@ class SnapshotSinkSpec extends AnyFunSuite {
     // measure not committed in sumCols → pointed error
     val e = intercept[IllegalArgumentException](
       SnapshotSink.aggRangeFromStats(spark, root, "k", 0L, 9L, "k"))
-    assert(e.getMessage.contains("sumCols"))
+    assert(e.getMessage.contains("no per-file sums"))
   }
 
   test("metadata-only aggregate: null range-column rows demote their file to a scan (no overcount)") {
@@ -273,8 +274,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
     val df = spark.range(40).select(
       when(col("id") === 15L, lit(null)).otherwise(col("id")).as("k"),
       col("id").as("m"))
-    SnapshotSink.commitIndexed(
-      df.repartitionByRange(4, col("k")), root, Seq("k"), None, Seq("m"))
+    SnapshotSink.commit(
+      df.repartitionByRange(4, col("k")), root, Sidecars(Seq("k"), Seq("m")))
     val served = SnapshotSink.aggRangeFromStats(spark, root, "k", 0L, 39L, "m")
     // the null-carrying file must SCAN; pure files still serve from metadata
     assert(served.scanFiles == 1 && served.metaFiles == 3)
@@ -288,20 +289,20 @@ class SnapshotSinkSpec extends AnyFunSuite {
     val root = tmpRoot()
     def slab(lo: Long, hi: Long) = spark.range(lo, hi)
       .select(col("id").as("k"), (col("id") * 2).as("m"))
-    SnapshotSink.commitIndexed(slab(0, 50).repartitionByRange(2, col("k")),
-      root, Seq("k"), None, Seq("m"))
-    // append extends the sum sidecar when the same sumCols are passed
-    SnapshotSink.appendIndexed(slab(50, 100).repartitionByRange(2, col("k")),
-      root, Seq("k"), None, Seq("m"))
+    SnapshotSink.commit(slab(0, 50).repartitionByRange(2, col("k")),
+      root, Sidecars(Seq("k"), Seq("m")))
+    // append extends the sum sidecar when the same sums are named
+    SnapshotSink.append(slab(50, 100).repartitionByRange(2, col("k")),
+      root, Sidecars(Seq("k"), Seq("m")))
     val a = SnapshotSink.aggRangeFromStats(spark, root, "k", 0L, 99L, "m")
     assert(a.df.head().getDecimal(1).longValueExact() == (0L until 100L).map(_ * 2).sum)
     // dropping sumCols on append is refused with a pointed message
     val e = intercept[IllegalArgumentException](
-      SnapshotSink.appendIndexed(slab(100, 110), root, Seq("k"), None))
+      SnapshotSink.append(slab(100, 110), root, Sidecars(Seq("k"))))
     assert(e.getMessage.contains("schema mismatch"))
     // compaction re-derives the sum sidecar for the new layout
     SnapshotSink.compact(spark, root, targetFiles = 2,
-      clusterCol = Some("k"), statsCols = Seq("k"), sumCols = Seq("m"))
+      clusterCol = Some("k"), idx = Sidecars(Seq("k"), Seq("m")))
     val c = SnapshotSink.aggRangeFromStats(spark, root, "k", 0L, 49L, "m")
     assert(c.df.head().getDecimal(1).longValueExact() == (0L until 50L).map(_ * 2).sum)
   }
@@ -312,34 +313,34 @@ class SnapshotSinkSpec extends AnyFunSuite {
     def h(s: String) = PortableSketch.md5Long(
       s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     def keys = SketchFunctions.portableHash64(array(col("e").cast("string")))
-    val sk = Some((keys, 64L, 0.01))
+    val sk = Some(SetIndex(keys, 64L))
     val root = tmpRoot()
     val rows = spark.range(80).select(expr("id DIV 10").as("e"),
       col("id").as("day"), col("id").as("v"))
-    SnapshotSink.commitIndexed(rows.repartition(4, col("e")), root,
-      Seq("day"), sk)
-    // delete keeps the zone maps alive (statsCols passed through)
+    SnapshotSink.commit(rows.repartition(4, col("e")), root,
+      Sidecars(Seq("day"), set = sk))
+    // delete keeps the zone maps alive (stats named in its Sidecars)
     SnapshotSink.deleteMatching(spark, root, h("3"), col("e") === 3L,
-      keys, 64L, statsCols = Seq("day"))
-    assert(SnapshotSink.readPruned(spark, root, "day", 0L, 9L).df.count() == 10L)
-    assert(SnapshotSink.readSetPruned(spark, root, h("2")).df
+      Sidecars(Seq("day"), set = sk))
+    assert(SnapshotSink.readPruned(spark, root, Seq(("day", 0L, 9L))).df.count() == 10L)
+    assert(SnapshotSink.readPruned(spark, root, probe = Some(h("2"))).df
       .filter(col("e") === 2L).count() == 10L)
     // upsert likewise
     SnapshotSink.upsertKeyed(spark, root,
       spark.range(1).select(lit(2L).as("e"), lit(999L).as("day"), lit(777L).as("v")),
-      Seq("e", "v"), "day", Nil, keys, 64L, statsCols = Seq("day"))
-    assert(SnapshotSink.readPruned(spark, root, "day", 999L, 999L).df.count() == 1L)
-    // TTL keeps the set index alive (setKeys passed through)
-    SnapshotSink.expireBelow(spark, root, "day", 40L, Seq("day"), setKeys = sk)
-    assert(SnapshotSink.readSetPruned(spark, root, h("6")).df
+      Seq("e", "v"), "day", Nil, Sidecars(Seq("day"), set = sk))
+    assert(SnapshotSink.readPruned(spark, root, Seq(("day", 999L, 999L))).df.count() == 1L)
+    // TTL keeps the set index alive (set index named in its Sidecars)
+    SnapshotSink.expireBelow(spark, root, "day", 40L, Sidecars(Seq("day"), set = sk))
+    assert(SnapshotSink.readPruned(spark, root, probe = Some(h("6"))).df
       .filter(col("e") === 6L).count() == 10L)
     // refusing a dual lineage without the rebuild params is loud
     val e1 = intercept[IllegalArgumentException](
-      SnapshotSink.deleteMatching(spark, root, h("5"), col("e") === 5L, keys, 64L))
-    assert(e1.getMessage.contains("statsCols"))
+      SnapshotSink.deleteMatching(spark, root, h("5"), col("e") === 5L, Sidecars(set = sk)))
+    assert(e1.getMessage.contains("carries a zone-map sidecar"))
     val e2 = intercept[IllegalArgumentException](
-      SnapshotSink.expireBelow(spark, root, "day", 50L, Seq("day")))
-    assert(e2.getMessage.contains("setKeys"))
+      SnapshotSink.expireBelow(spark, root, "day", 50L, Sidecars(Seq("day"))))
+    assert(e2.getMessage.contains("carries a set index"))
   }
 
   test("expireBelow: whole files drop from the manifest with zero I/O; only the boundary file rewrites") {
@@ -350,12 +351,12 @@ class SnapshotSinkSpec extends AnyFunSuite {
     val df = spark.range(100)
       .select(when(col("id") === 7L, lit(null)).otherwise(col("id")).as("k"),
         col("id").as("v"))
-    val s1 = SnapshotSink.commitWithStats(
-      df.repartitionByRange(10, col("k")), root, Seq("k"))
+    val s1 = SnapshotSink.commit(
+      df.repartitionByRange(10, col("k")), root, Sidecars(Seq("k")))
     // cutoff 35: files [0..9],[10..19],[20..29] drop whole, [30..39]
     // straddles (rewrite), [40..] carry — the null row's file rewrites
     // or carries depending on where range partitioning put it
-    val s2 = SnapshotSink.expireBelow(spark, root, "k", 35L, Seq("k"))
+    val s2 = SnapshotSink.expireBelow(spark, root, "k", 35L, Sidecars(Seq("k")))
     assert(s2.version == 2)
     val carried = s1.files.toSet intersect s2.files.toSet
     assert(carried.size >= 6) // at least [40..99]'s six files verbatim
@@ -365,16 +366,16 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(left.filter(col("k").isNull).count() == 1) // null kept
     assert(s2.rows == 100L - 34L) // k in 0..34 minus the null twin (id 7)
     // the new sidecar still prunes correctly on the survivor range
-    val pr = SnapshotSink.readPruned(spark, root, "k", 90L, 99L)
+    val pr = SnapshotSink.readPruned(spark, root, Seq(("k", 90L, 99L)))
     assert(pr.keptFiles <= 2 && pr.df.count() == 10L)
     // pre-expiry version still time-travels
     assert(SnapshotSink.read(spark, root, Some(1)).count() == 100L)
     // expiring below the table minimum is a no-op version (all carry)
-    val s3 = SnapshotSink.expireBelow(spark, root, "k", -5L, Seq("k"))
+    val s3 = SnapshotSink.expireBelow(spark, root, "k", -5L, Sidecars(Seq("k")))
     assert(s3.rows == s2.rows)
     // expiry column must be a stats column
     intercept[IllegalArgumentException](
-      SnapshotSink.expireBelow(spark, root, "v", 0L, Seq("k")))
+      SnapshotSink.expireBelow(spark, root, "v", 0L, Sidecars(Seq("k"))))
   }
 
   test("multi-range pruning: z-ordered layout prunes on both dims; x-sorted layout only on x") {
@@ -385,15 +386,15 @@ class SnapshotSinkSpec extends AnyFunSuite {
     val grid = spark.range(1024).select(
       (col("id") % 32).as("x"), expr("id DIV 32").as("y"), col("id").as("v"))
     val rootZ = tmpRoot()
-    SnapshotSink.commitWithStats(
+    SnapshotSink.commit(
       grid.repartitionByRange(16, ZOrder.zValue(col("x"), col("y"))),
-      rootZ, Seq("x", "y"))
+      rootZ, Sidecars(Seq("x", "y")))
     val rootX = tmpRoot()
-    SnapshotSink.commitWithStats(
-      grid.repartitionByRange(16, col("x")), rootX, Seq("x", "y"))
+    SnapshotSink.commit(
+      grid.repartitionByRange(16, col("x")), rootX, Sidecars(Seq("x", "y")))
     val ranges = Seq(("x", 0L, 7L), ("y", 0L, 7L))
-    val z = SnapshotSink.readPrunedRanges(spark, rootZ, ranges)
-    val x = SnapshotSink.readPrunedRanges(spark, rootX, ranges)
+    val z = SnapshotSink.readPruned(spark, rootZ, ranges)
+    val x = SnapshotSink.readPruned(spark, rootX, ranges)
     // z-layout: the corner box lives in O(1) z-contiguous files; the
     // x-layout keeps every file overlapping x∈[0,7] (each spans all y)
     assert(z.keptFiles < x.keptFiles)
@@ -404,8 +405,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(z.df.agg(sum("v")).head().getLong(0) == want)
     assert(x.df.agg(sum("v")).head().getLong(0) == want)
     // degenerate single range ≡ readPruned
-    val one = SnapshotSink.readPrunedRanges(spark, rootX, Seq(("x", 0L, 7L)))
-    assert(one.keptFiles == SnapshotSink.readPruned(spark, rootX, "x", 0L, 7L).keptFiles)
+    val one = SnapshotSink.readPruned(spark, rootX, Seq(("x", 0L, 7L)))
+    assert(one.keptFiles == SnapshotSink.readPruned(spark, rootX, Seq(("x", 0L, 7L))).keptFiles)
   }
 
   test("zone maps: footer-stats fast path matches the distributed stats pass exactly (nulls, ints, string fallback)") {
@@ -418,8 +419,8 @@ class SnapshotSinkSpec extends AnyFunSuite {
       (col("id") % 7).cast("int").as("i"),
       concat(lit("s"), col("id")).as("s"))
     val rootA = tmpRoot()
-    val snapA = SnapshotSink.commitWithStats(
-      df.repartitionByRange(5, col("k")), rootA, Seq("k", "i"))
+    val snapA = SnapshotSink.commit(
+      df.repartitionByRange(5, col("k")), rootA, Sidecars(Seq("k", "i")))
     assert(snapA.rows == 100)
     val stA = SnapshotSink.statsTable(spark, rootA)
     assert(stA.columns.toSet == Set("file", "rows",
@@ -449,7 +450,7 @@ class SnapshotSinkSpec extends AnyFunSuite {
     // a STRING stats column is footer-ineligible (truncation risk): the
     // commit must fall back to the distributed pass and still be exact
     val rootB = tmpRoot()
-    SnapshotSink.commitWithStats(df.repartition(3), rootB, Seq("s"))
+    SnapshotSink.commit(df.repartition(3), rootB, Sidecars(Seq("s")))
     val stB = SnapshotSink.statsTable(spark, rootB)
     assert(stB.agg(sum("rows")).head.getLong(0) == 100L)
     assert(stB.agg(min("s__min")).head.getString(0) == "s0")
@@ -462,13 +463,13 @@ class SnapshotSinkSpec extends AnyFunSuite {
     // intersection must match on CANONICAL paths, not raw strings
     val root = tmpRoot()
     val df = spark.range(100).select(col("id").as("k"), col("id").as("u"))
-    SnapshotSink.commitIndexed(
-      df.repartitionByRange(10, col("k")), root, Seq("k"),
-      Some((graft.plans.SketchFunctions.portableHash64(
-        array(col("u").cast("string"))), 50L, 0.01)))
+    SnapshotSink.commit(
+      df.repartitionByRange(10, col("k")), root, Sidecars(Seq("k"),
+        set = Some(SetIndex(graft.plans.SketchFunctions.portableHash64(
+          array(col("u").cast("string"))), 50L))))
     val h = graft.plans.PortableSketch.md5Long(
       "41".getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val pr = SnapshotSink.readPrunedBoth(spark, root, "k", 40L, 49L, h)
+    val pr = SnapshotSink.readPruned(spark, root, Seq(("k", 40L, 49L)), Some(h))
     assert(pr.keptFiles >= 1 && pr.keptFiles < pr.totalFiles)
     assert(pr.df.filter(col("u") === 41L).count() == 1L)
   }
@@ -477,7 +478,7 @@ class SnapshotSinkSpec extends AnyFunSuite {
     val root = tmpRoot()
     SnapshotSink.commit(Seq((1L, "a")).toDF("k", "v"), root)
     val e = intercept[IllegalArgumentException](SnapshotSink.statsTable(spark, root))
-    assert(e.getMessage.contains("commitWithStats"))
+    assert(e.getMessage.contains("committed without stats"))
   }
 
   test("write-audit-publish: staged versions invisible, pointer sequenced, rollback works") {
@@ -512,6 +513,28 @@ class SnapshotSinkSpec extends AnyFunSuite {
     assert(SnapshotSink.readPublished(spark, root).count() == 1)
   }
 
+  test("vacuum never retires the published version (write-audit-publish)") {
+    import org.apache.spark.sql.functions._
+    val root = tmpRoot()
+    def slab(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id").as("k"))
+    SnapshotSink.commit(slab(0, 10), root, Sidecars(Seq("k")))  // v1, published
+    SnapshotSink.publish(spark, root, 1)
+    SnapshotSink.append(slab(10, 20), root, Sidecars(Seq("k"))) // v2, staged
+    SnapshotSink.commit(slab(20, 25), root)                     // v3, staged
+    // keepLast = 1 keeps v3 and the published v1; only v2 retires
+    assert(SnapshotSink.vacuum(spark, root, keepLast = 1, orphanGraceMs = 0L) == Seq(2))
+    assert(SnapshotSink.versions(spark, root) == Seq(1, 3))
+    assert(SnapshotSink.readPublished(spark, root).collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 10L))
+    assert(SnapshotSink.statsTable(spark, root, Some(1)).count() > 0)
+    // v2's own batch dir is gone; v1's and v3's stay
+    assert(new java.io.File(s"$root/data").listFiles().length == 2)
+    // once the pointer moves, the old published version retires like any other
+    SnapshotSink.publish(spark, root, 3)
+    assert(SnapshotSink.vacuum(spark, root, keepLast = 1, orphanGraceMs = 0L) == Seq(1))
+    assert(SnapshotSink.readPublished(spark, root).count() == 5)
+  }
+
   test("cdc: keyed I/D/U delta between any two versions; unchanged rows omitted") {
     val root = tmpRoot()
     SnapshotSink.commit(Seq((1L, 10L), (2L, 20L), (3L, 30L)).toDF("k", "v"), root)
@@ -525,5 +548,101 @@ class SnapshotSinkSpec extends AnyFunSuite {
     SnapshotSink.commit(Seq((1L, "x")).toDF("k", "w"), root)
     intercept[IllegalArgumentException](
       SnapshotSink.cdc(spark, root, 2, 3, Seq("k")))
+  }
+
+  test("append onto an indexed lineage must name its sidecars; a plain commit starts fresh") {
+    import org.apache.spark.sql.functions._
+    import graft.plans.SketchFunctions
+    def slab(lo: Long, hi: Long) = spark.range(lo, hi).select(col("id").as("k"))
+    val root = tmpRoot()
+    SnapshotSink.commit(slab(0, 50).repartitionByRange(5, col("k")), root, Sidecars(Seq("k")))
+    val e = intercept[IllegalArgumentException](SnapshotSink.append(slab(50, 60), root))
+    assert(e.getMessage.contains("zone-map sidecar"))
+    assert(SnapshotSink.versions(spark, root) == Seq(1)) // refused before any write
+    // naming the lineage's sidecar extends it, and the tip still prunes
+    SnapshotSink.append(slab(50, 60), root, Sidecars(Seq("k")))
+    assert(SnapshotSink.readPruned(spark, root, Seq(("k", 55L, 59L))).df.count() == 5L)
+    // a set-indexed lineage refuses a plain append the same way
+    val root2 = tmpRoot()
+    val set = Some(SetIndex(SketchFunctions.portableHash64(array(col("k").cast("string"))), 64L))
+    SnapshotSink.commit(slab(0, 20), root2, Sidecars(set = set))
+    val e2 = intercept[IllegalArgumentException](SnapshotSink.append(slab(20, 30), root2))
+    assert(e2.getMessage.contains("set index"))
+    // a plain commit is a fresh sidecar set: no stats, nothing refused
+    SnapshotSink.commit(slab(0, 10), root)
+    intercept[IllegalArgumentException](SnapshotSink.statsTable(spark, root))
+    assert(SnapshotSink.append(slab(10, 20), root).rows == 20L)
+  }
+
+  test("compact on an indexed lineage must name its sidecars") {
+    import org.apache.spark.sql.functions._
+    val root = tmpRoot()
+    SnapshotSink.commit(spark.range(0, 40).select(col("id").as("k"))
+      .repartitionByRange(4, col("k")), root, Sidecars(Seq("k")))
+    val e = intercept[IllegalArgumentException](
+      SnapshotSink.compact(spark, root, targetFiles = 2))
+    assert(e.getMessage.contains("zone-map sidecar"))
+    assert(SnapshotSink.versions(spark, root) == Seq(1))
+    SnapshotSink.compact(spark, root, targetFiles = 2, clusterCol = Some("k"),
+      idx = Sidecars(Seq("k")))
+    assert(SnapshotSink.readPruned(spark, root, Seq(("k", 0L, 9L))).df.count() == 10L)
+  }
+
+  test("store writes and pruned reads stay within their Spark job budgets") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.plans.{PortableSketch, SketchFunctions}
+    // a sidecar computed twice, a sidecar re-read, or a count pass that
+    // comes back adds jobs to one of these three shapes
+    val sc = spark.sparkContext
+    val tag = "graft.test.store.budget"
+    def jobs(label: String)(f: => Unit): Int = {
+      val n = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties != null && e.properties.getProperty(tag) == label) n.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(tag, label)
+      try f
+      finally {
+        sc.setLocalProperty(tag, null)
+        org.apache.spark.ListenerBusAccess.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+      n.get()
+    }
+    def events(lo: Long, hi: Long) = spark.range(lo, hi).select(
+      expr("id % 30").as("day"), expr("id % 97").as("user_id"), col("id").as("value"))
+    val idx = Sidecars(Seq("day"), set = Some(SetIndex(
+      SketchFunctions.portableHash64(array(col("user_id").cast("string"))), 4096L)))
+    val probe = PortableSketch.md5Long("41".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val root = tmpRoot()
+    // (a) the q148 shape: zone map on a bigint day plus a set index over
+    // 10 range-clustered files, then the composite pruned read
+    var pr: SnapshotSink.PrunedRead = null
+    val a = jobs("a") {
+      SnapshotSink.commit(events(0, 3000).repartitionByRange(10, col("day")), root, idx)
+      pr = SnapshotSink.readPruned(spark, root, Seq(("day", 10L, 19L)), Some(probe))
+    }
+    assert(pr.keptFiles < pr.totalFiles)
+    assert(pr.df.filter(col("user_id") === 41L).count() ==
+      events(0, 3000).filter(col("user_id") === 41L && col("day").between(10L, 19L)).count())
+    // (b) an append onto that lineage
+    val b = jobs("b") {
+      SnapshotSink.append(events(3000, 4000).repartitionByRange(4, col("day")), root, idx)
+    }
+    assert(SnapshotSink.snapshot(spark, root).rows == 4000L)
+    // (c) a TTL on a footer-exact stats lineage
+    val root2 = tmpRoot()
+    SnapshotSink.commit(events(0, 3000).repartitionByRange(10, col("day")), root2,
+      Sidecars(Seq("day")))
+    val c = jobs("c") {
+      SnapshotSink.expireBelow(spark, root2, "day", 15L, Sidecars(Seq("day")))
+    }
+    assert(SnapshotSink.snapshot(spark, root2).rows == 1500L)
+    // measured at the one commit step; the five separate commit paths it
+    // replaced ran 13, 10 and 7 jobs on these shapes
+    assert(a <= 10 && b <= 7 && c <= 3, s"jobs (a, b, c) = ($a, $b, $c)")
   }
 }

@@ -486,7 +486,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(SnapshotSink.snapshot(spark, root).rows == 120L)
     // the sidecar covers every file of the grown table and a mid-range
     // probe prunes the other batches' files
-    val pr = SnapshotSink.readPruned(spark, root, "day", 10L, 19L)
+    val pr = SnapshotSink.readPruned(spark, root, Seq(("day", 10L, 19L)))
     assert(pr.totalFiles == 6 && pr.keptFiles <= 2)
     val got = pr.df.agg(org.apache.spark.sql.functions.sum("v")).head().getLong(0)
     val want = spark.read.json(src.toString)
